@@ -942,7 +942,7 @@ class PreparedPolygons:
             self._build_grid()
         out_pt: list[np.ndarray] = []
         out_poly: list[np.ndarray] = []
-        if not self._gridded:
+        if not self._gridded or not len(px):
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
         # one pass: cell key per point, group points by cell
         cx = np.floor((px - self._gx0) / self._csx).astype(np.int64)

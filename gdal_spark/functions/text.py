@@ -22,6 +22,11 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
+def _starts(count: Column) -> Column:
+    """1..count; empty when count < 1, where sequence(1, count) descends."""
+    return F.array_remove(F.sequence(F.lit(0), F.greatest(count, F.lit(0))), 0)
+
+
 def shingle_array(toks: Column, n: int = 3) -> Column:
     """n-word shingles from an ALREADY-MATERIALIZED token-array column.
 
@@ -31,7 +36,7 @@ def shingle_array(toks: Column, n: int = 3) -> Column:
     the ``slice`` re-tokenizes the document once per shingle —
     O(n_words²) string work (measured 8× wall on 90-word docs at 50 k
     rows). An attribute reference per element is a cheap row-field read."""
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0)))
+    idx = _starts(F.size(toks) - F.lit(n - 1))
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
 
 
@@ -44,7 +49,8 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 
 
 def char_ngrams(text: Column, n: int = 8) -> Column:
-    idx = F.sequence(F.lit(1), F.greatest(F.length(text) - F.lit(n - 1), F.lit(0)))
+    """Array of n-character substrings; empty when text is shorter than n."""
+    idx = _starts(F.length(text) - F.lit(n - 1))
     return F.transform(idx, lambda i: F.substring(text, i, n))
 
 

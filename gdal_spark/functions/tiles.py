@@ -174,23 +174,20 @@ def google_y(ty: Column, zoom: int) -> Column:
 
 
 def quadkey(tx: Column, ty: Column, zoom: int) -> Column:
-    """Quadkey string built bit-by-bit as a concat of digit columns.
-
-    zoom is a Python int, so the loop unrolls into a fixed concat
-    expression — still zero-UDF (gdal2tiles.py QuadTree semantics).
-    """
-    gy = F.lit(2 ** zoom - 1) - ty
-    digits = []
-    for i in range(zoom, 0, -1):
-        mask = 1 << (i - 1)
-        digit = (
-            F.when(tx.bitwiseAND(F.lit(mask)) != 0, F.lit(1)).otherwise(F.lit(0))
-            + F.when(gy.bitwiseAND(F.lit(mask)) != 0, F.lit(2)).otherwise(F.lit(0))
-        )
-        digits.append(digit.cast("string"))
-    if not digits:
+    """Quadkey string (gdal2tiles.py QuadTree): the base-4 digits of the
+    Morton interleave of (tx, google y), left-padded to ``zoom`` digits.
+    Only the low ``zoom`` bits count, where gy = 2^zoom − 1 − ty equals
+    ~ty. Binary digits read as base-4 digits spread a coordinate's bits to
+    the even positions, so the interleave is spread(tx) + 2·spread(gy).
+    A fixed few column calls at any zoom up to 31, zero-UDF."""
+    if zoom == 0:
         return F.lit("")
-    return F.concat(*digits)
+
+    def spread(v: Column) -> Column:
+        return F.conv(F.bin(v.bitwiseAND((1 << zoom) - 1)), 4, 10).cast("long")
+
+    morton = spread(tx.cast("long")) + spread(F.bitwise_not(ty.cast("long"))) * 2
+    return F.lpad(F.conv(morton.cast("string"), 10, 4), zoom, "0")
 
 
 # ---------------------------------------------------------------------------
@@ -268,13 +265,10 @@ def with_tile_columns(df, lon: str = "lon", lat: str = "lat", zoom: int = 12,
 
     All pure column math — Catalyst sees one narrow projection.
     """
-    lo, la = F.col(lon), F.col(lat)
-    tx = tile_x(lo, zoom)
-    ty = tile_y(la, zoom)
+    tx, ty = F.col(prefix + "tx"), F.col(prefix + "ty")
     return (
-        df.withColumn(prefix + "tx", tx)
-        .withColumn(prefix + "ty", ty)
-        .withColumn(prefix + "gy", google_y(F.col(prefix + "ty"), zoom))
-        .withColumn(prefix + "quadkey",
-                    quadkey(F.col(prefix + "tx"), F.col(prefix + "ty"), zoom))
+        df.withColumns({prefix + "tx": tile_x(F.col(lon), zoom),
+                        prefix + "ty": tile_y(F.col(lat), zoom)})
+        .withColumns({prefix + "gy": google_y(ty, zoom),
+                      prefix + "quadkey": quadkey(tx, ty, zoom)})
     )

@@ -35,8 +35,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.functions.text import word_shingles
-
 
 def exact_dup_groups(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Groups of byte-identical texts: (text_hash, n_docs, min_doc_id)."""

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from gdal_spark.functions import clipping as CL
 from gdal_spark.functions import geometry as G
 from gdal_spark.operators.spatial_join import point_in_polygon_join, with_envelope
+from gdal_spark.session import local_frame
 
 
 def _difference(subject_wkb: bytes,
@@ -257,8 +258,8 @@ def layer_union(polys: DataFrame, cells: DataFrame,
 
     pairs = env.mapInPandas(overlap_pairs, schema="cell_id long, swkb binary")
     # every cell gets a group row even with no overlapping input feature
-    all_cells = (spark.createDataFrame([(c,) for c, _, _ in cell_env],
-                                       "cell_id long")
+    all_cells = (local_frame(spark, [(c,) for c, _, _ in cell_env],
+                             "cell_id long")
                  .withColumn("swkb", F.lit(None).cast("binary")))
     pairs = pairs.unionByName(all_cells)
 

@@ -50,6 +50,7 @@ def _extend_schema(schema: T.StructType, *fields: tuple[str, T.DataType]) -> T.S
 
 from gdal_spark.functions import tiles
 from gdal_spark.functions.geometry import PreparedPolygons, decode_polygons
+from gdal_spark.session import local_frame
 
 DEFAULT_BROADCAST_MAX_POLYGONS = 100_000
 
@@ -96,10 +97,6 @@ def point_in_polygon_join(
             # [xmin,xmax)×[ymin,ymax), pure JVM columns, fully scalable
             return _rect_pip_jvm(points, rects, poly_id, lon, lat, how)
         return _broadcast_pip(points, poly_rows, poly_id, lon, lat, how)
-    if strategy == "arrow":
-        rows = polygons.select(poly_id, poly_wkb).collect()
-        return _broadcast_pip(points, [(r[0], bytes(r[1])) for r in rows],
-                              poly_id, lon, lat, how)
     if strategy == "shuffle":
         return _shuffle_pip(points, polygons, poly_id, poly_wkb, lon, lat, how, cell_zoom)
     raise ValueError(f"unsupported strategy={strategy!r}")
@@ -139,19 +136,19 @@ def _as_rectangles(poly_rows) -> list | None:
             return None
         if len(parts) != 1 or len(parts[0]) != 1:
             return None
-        r = parts[0][0]
-        if len(r) and np.array_equal(r[0], r[-1]):
+        r = parts[0][0].tolist()  # plain floats: numpy ops cost more on 4 corners
+        if r and r[0] == r[-1]:
             r = r[:-1]
         if len(r) != 4:
             return None
-        xs = np.unique(r[:, 0]); ys = np.unique(r[:, 1])
+        xs = sorted({p[0] for p in r}); ys = sorted({p[1] for p in r})
         if len(xs) != 2 or len(ys) != 2:
             return None
         # each corner present exactly once
-        if sorted(map(tuple, r)) != sorted(
-                [(xs[0], ys[0]), (xs[0], ys[1]), (xs[1], ys[0]), (xs[1], ys[1])]):
+        if sorted(map(tuple, r)) != [
+                (xs[0], ys[0]), (xs[0], ys[1]), (xs[1], ys[0]), (xs[1], ys[1])]:
             return None
-        out.append((pid, float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1])))
+        out.append((pid, xs[0], ys[0], xs[1], ys[1]))
     return out
 
 
@@ -161,11 +158,12 @@ def _rect_pip_jvm(points, rects, poly_id, lon, lat, how) -> DataFrame:
     ray-cast parity for axis-aligned rings)."""
     spark = points.sparkSession
     arr = np.array([[x0, y0, x1, y1] for _pid, x0, y0, x1, y1 in rects])
-    gx0, gy0 = arr[:, 0].min(), arr[:, 1].min()
+    # plain floats: a numpy scalar literal costs an extra cast column call
+    (gx0, gy0, _, _), (_, _, gx1, gy1) = arr.min(0).tolist(), arr.max(0).tolist()
     n = len(rects)
     target = min(max(int(np.sqrt(n / 2.0)) * 2, 1), 512)
-    csx = max((arr[:, 2].max() - gx0) / target, 1e-12)
-    csy = max((arr[:, 3].max() - gy0) / target, 1e-12)
+    csx = max((gx1 - gx0) / target, 1e-12)
+    csy = max((gy1 - gy0) / target, 1e-12)
     cell_rows = []
     for (pid, x0, y0, x1, y1) in rects:
         cx0 = int((x0 - gx0) / csx); cx1 = int((x1 - gx0) / csx)
@@ -173,13 +171,13 @@ def _rect_pip_jvm(points, rects, poly_id, lon, lat, how) -> DataFrame:
         for cy in range(cy0, cy1 + 1):
             for cx in range(cx0, cx1 + 1):
                 cell_rows.append((cx, cy, pid, x0, y0, x1, y1))
-    cells = spark.createDataFrame(
-        cell_rows, f"_cx int, _cy int, {poly_id} long, "
-                   "_rx0 double, _ry0 double, _rx1 double, _ry1 double")
+    cells = local_frame(
+        spark, cell_rows, f"_cx int, _cy int, {poly_id} long, "
+                          "_rx0 double, _ry0 double, _rx1 double, _ry1 double")
     px, py = F.col(lon), F.col(lat)
-    keyed = (points
-             .withColumn("_cx", F.floor((px - F.lit(gx0)) / F.lit(csx)).cast("int"))
-             .withColumn("_cy", F.floor((py - F.lit(gy0)) / F.lit(csy)).cast("int")))
+    keyed = points.withColumns({
+        "_cx": F.floor((px - F.lit(gx0)) / F.lit(csx)).cast("int"),
+        "_cy": F.floor((py - F.lit(gy0)) / F.lit(csy)).cast("int")})
     contains = ((px >= F.col("_rx0")) & (px < F.col("_rx1"))
                 & (py >= F.col("_ry0")) & (py < F.col("_ry1")))
     pt_cols = points.columns
@@ -262,6 +260,13 @@ def _broadcast_pip(points, poly_rows, poly_id, lon, lat, how) -> DataFrame:
 # shuffle path
 # ---------------------------------------------------------------------------
 
+def _key_lat(lat):
+    """Latitude clamped to the Web-Mercator domain, for cell keys only:
+    tile_y of a latitude beyond ±MAX_LAT is not a finite tile row. The
+    exact ray-cast test still sees the raw coordinates."""
+    return F.least(F.greatest(lat, F.lit(-tiles.MAX_LAT)), F.lit(tiles.MAX_LAT))
+
+
 def polygon_cover_cells(polygons: DataFrame, poly_wkb: str, cell_zoom: int,
                         xmin="xmin", ymin="ymin", xmax="xmax", ymax="ymax") -> DataFrame:
     """Explode each polygon over all (tx, ty) cells its bbox covers —
@@ -272,8 +277,8 @@ def polygon_cover_cells(polygons: DataFrame, poly_wkb: str, cell_zoom: int,
         polygons = with_envelope(polygons, poly_wkb)
     tx_lo = tiles.tile_x(F.col(xmin), cell_zoom)
     tx_hi = tiles.tile_x(F.col(xmax), cell_zoom)
-    ty_lo = tiles.tile_y(F.col(ymin), cell_zoom)
-    ty_hi = tiles.tile_y(F.col(ymax), cell_zoom)
+    ty_lo = tiles.tile_y(_key_lat(F.col(ymin)), cell_zoom)
+    ty_hi = tiles.tile_y(_key_lat(F.col(ymax)), cell_zoom)
     return (
         polygons.withColumn("_tx", F.explode(F.sequence(tx_lo, tx_hi)))
         .withColumn("_ty", F.explode(F.sequence(ty_lo, ty_hi)))
@@ -323,7 +328,7 @@ def _shuffle_pip(points, polygons, poly_id, poly_wkb, lon, lat, how, cell_zoom) 
         points = points.withColumn("_rid", F.monotonically_increasing_id())
     pts = (
         points.withColumn("_tx", tiles.tile_x(F.col(lon), cell_zoom))
-        .withColumn("_ty", tiles.tile_y(F.col(lat), cell_zoom))
+        .withColumn("_ty", tiles.tile_y(_key_lat(F.col(lat)), cell_zoom))
     )
     polys = polygon_cover_cells(
         polygons.select(poly_id, poly_wkb), poly_wkb, cell_zoom
@@ -353,7 +358,8 @@ def _shuffle_pip(points, polygons, poly_id, poly_wkb, lon, lat, how, cell_zoom) 
             order = valid[np.argsort(pids[valid], kind="stable")]
             sorted_pids = pids[order]
             starts = np.flatnonzero(np.r_[True, sorted_pids[1:] != sorted_pids[:-1]])
-            bounds = np.r_[starts, len(sorted_pids)]
+            # a batch of left-join misses only has no polygon groups
+            bounds = np.r_[starts, len(sorted_pids)] if len(order) else []
             for s, e in zip(bounds[:-1], bounds[1:]):
                 idx = order[s:e]
                 prep = PreparedPolygons(ids=[0], wkbs=[bytes(wkbs.iloc[idx[0]])])

@@ -26,6 +26,7 @@ from gdal_spark.operators import dedup as DD
 from gdal_spark.operators import knn as KNN
 from gdal_spark.operators import spatial_join as SJ
 from gdal_spark.operators import tiling
+from gdal_spark.session import local_frame
 from gdal_spark.sources import polygons as PG
 
 # ---------------------------------------------------------------------------
@@ -2391,7 +2392,8 @@ def q_range_join(spark, sf_dir):
     from gdal_spark.operators import joins as J
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .select("event_id", "value")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("tiny", 0.0, 2.0), ("small", 2.0, 8.0), ("mid", 8.0, 32.0),
          ("large", 32.0, 70.0)],
         "band string, lo double, hi double")

@@ -11,7 +11,8 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _package_zip() -> str:
@@ -77,3 +78,26 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addPyFile(_package_zip())
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A driver-built table (row tuples) as an Arrow ``LocalRelation``.
+
+    ``createDataFrame(list)`` makes a Python RDD, so every collect or
+    broadcast of the table runs a job whose tasks re-pickle it in a Python
+    worker. A LocalRelation keeps the rows in the plan: collecting it runs
+    no job, scanning or broadcasting it runs JVM tasks only, and Catalyst
+    knows its exact row count. For small tables only (grids, cell indexes,
+    lookup bands) — Catalyst folds projections over it on the driver.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -15,10 +15,27 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gdal_spark.functions import geometry as G
+from gdal_spark.session import local_frame
+
+GRID_SCHEMA = T.StructType([
+    T.StructField("cell_id", T.LongType(), False),
+    T.StructField("cell_name", T.StringType(), False),
+    T.StructField("wkb", T.BinaryType(), False),
+    T.StructField("xmin", T.DoubleType(), False),
+    T.StructField("ymin", T.DoubleType(), False),
+    T.StructField("xmax", T.DoubleType(), False),
+    T.StructField("ymax", T.DoubleType(), False),
+])
+POLY_SCHEMA = T.StructType([
+    T.StructField("fid", T.LongType(), False),
+    T.StructField("geometry", T.BinaryType(), False),
+    T.StructField("area", T.DoubleType(), False),
+    T.StructField("eas_id", T.LongType(), False),
+    T.StructField("prfedea", T.StringType(), False),
+])
 
 
 def admin_grid(spark: SparkSession, nx: int = 12, ny: int = 6,
@@ -38,17 +55,8 @@ def admin_grid(spark: SparkSession, nx: int = 12, ny: int = 6,
             y0, y1 = lat_min + j * dy, lat_min + (j + 1) * dy
             ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
             rows.append((j * nx + i, f"cell_{i}_{j}",
-                         bytearray(G.encode_polygon([ring])), x0, y0, x1, y1))
-    schema = T.StructType([
-        T.StructField("cell_id", T.LongType(), False),
-        T.StructField("cell_name", T.StringType(), False),
-        T.StructField("wkb", T.BinaryType(), False),
-        T.StructField("xmin", T.DoubleType(), False),
-        T.StructField("ymin", T.DoubleType(), False),
-        T.StructField("xmax", T.DoubleType(), False),
-        T.StructField("ymax", T.DoubleType(), False),
-    ])
-    return spark.createDataFrame(rows, schema)
+                         G.encode_polygon([ring]), x0, y0, x1, y1))
+    return local_frame(spark, rows, GRID_SCHEMA)
 
 
 # AREA / EAS_ID / PRFEDEA ported from /root/reference/autotest/ogr/data/poly.dbf
@@ -91,20 +99,13 @@ def _poly_geom(fid: int) -> bytes:
 
 
 def poly_fixture(spark: SparkSession) -> DataFrame:
-    schema = T.StructType([
-        T.StructField("fid", T.LongType(), False),
-        T.StructField("geometry", T.BinaryType(), False),
-        T.StructField("area", T.DoubleType(), False),
-        T.StructField("eas_id", T.LongType(), False),
-        T.StructField("prfedea", T.StringType(), False),
-    ])
-    rows = [(fid, bytearray(_poly_geom(fid)), area, eas, prf)
+    rows = [(fid, _poly_geom(fid), area, eas, prf)
             for fid, area, eas, prf in POLY_ROWS]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, POLY_SCHEMA)
 
 
 def idlink_fixture(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(IDLINK_ROWS, "eas_id long, name string")
+    return local_frame(spark, IDLINK_ROWS, "eas_id long, name string")
 
 
 # ---------------------------------------------------------------------------
@@ -140,16 +141,9 @@ def rot_poly_fixture(spark: SparkSession) -> DataFrame:
             return G.encode_polygon([_uv_to_xy(square), _uv_to_xy(hole)])
         return G.encode_polygon([_uv_to_xy(square)])
 
-    schema = T.StructType([
-        T.StructField("fid", T.LongType(), False),
-        T.StructField("geometry", T.BinaryType(), False),
-        T.StructField("area", T.DoubleType(), False),
-        T.StructField("eas_id", T.LongType(), False),
-        T.StructField("prfedea", T.StringType(), False),
-    ])
-    rows = [(fid, bytearray(geom(fid)), area, eas, prf)
+    rows = [(fid, geom(fid), area, eas, prf)
             for fid, area, eas, prf in POLY_ROWS]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, POLY_SCHEMA)
 
 
 def diamond_grid(spark: SparkSession, nx: int, ny: int,
@@ -175,16 +169,7 @@ def diamond_grid(spark: SparkSession, nx: int, ny: int,
                                     [u0, v1], [u0, v0]])
             ring = _uv_to_xy(ring_uv)
             rows.append((j * nx + i, f"dcell_{i}_{j}",
-                         bytearray(G.encode_polygon([ring])),
+                         G.encode_polygon([ring]),
                          float(ring[:, 0].min()), float(ring[:, 1].min()),
                          float(ring[:, 0].max()), float(ring[:, 1].max())))
-    schema = T.StructType([
-        T.StructField("cell_id", T.LongType(), False),
-        T.StructField("cell_name", T.StringType(), False),
-        T.StructField("wkb", T.BinaryType(), False),
-        T.StructField("xmin", T.DoubleType(), False),
-        T.StructField("ymin", T.DoubleType(), False),
-        T.StructField("xmax", T.DoubleType(), False),
-        T.StructField("ymax", T.DoubleType(), False),
-    ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, GRID_SCHEMA)

@@ -5,16 +5,17 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import reference_fixture
 from gdal_spark.apps import read_vector
 from gdal_spark.functions import geometry as G
 from gdal_spark.sources.dgn import read_dgn
 
-DGN = "/root/reference/autotest/ogr/data/smalltest.dgn"
+DGN = "ogr/data/smalltest.dgn"
 
 
 @pytest.fixture(scope="module")
 def rows(spark):
-    return read_dgn(spark, DGN).orderBy("fid").collect()
+    return read_dgn(spark, reference_fixture(DGN)).orderBy("fid").collect()
 
 
 def test_dgn_text_element(rows):                           # ogr_dgn_2
@@ -50,12 +51,12 @@ def test_dgn_filled_shape(rows):                           # ogr_dgn_4
 
 
 def test_dgn_attribute_filter(spark):                      # ogr_dgn_5
-    df = read_dgn(spark, DGN)
+    df = read_dgn(spark, reference_fixture(DGN))
     got = [r["Type"] for r in
            df.filter("Type = 15 and Level = 2").collect()]
     assert got == [15]
 
 
 def test_dgn_dispatch(spark):                              # ogr_dgn_1
-    df = read_vector(spark, DGN)
+    df = read_vector(spark, reference_fixture(DGN))
     assert df.count() == 4

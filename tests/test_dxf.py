@@ -13,11 +13,12 @@ import re
 import numpy as np
 import pytest
 
+from conftest import reference_fixture
 import gdal_spark.sources.dxf as DXF
 from gdal_spark.apps import read_vector, write_vector
 from gdal_spark.functions import geometry as G
 
-D = "/root/reference/autotest/ogr/data/"
+D = "ogr/data/"
 
 
 def _feats(name, arc_stepsize=None):
@@ -25,7 +26,7 @@ def _feats(name, arc_stepsize=None):
     if arc_stepsize is not None:
         DXF.ARC_STEPSIZE = arc_stepsize
     try:
-        return list(DXF._entity_stream(DXF._DXFFile(D + name)))
+        return list(DXF._entity_stream(DXF._DXFFile(reference_fixture(D + name))))
     finally:
         DXF.ARC_STEPSIZE = old
 
@@ -250,7 +251,7 @@ def test_dxf_3dface_and_solid():                           # ogr_dxf_25/26
 # --- Spark surface ----------------------------------------------------------
 
 def test_dxf_spark_read(spark):
-    df = read_vector(spark, D + "assorted.dxf")
+    df = read_vector(spark, reference_fixture(D + "assorted.dxf"))
     assert df.count() == 16
     rows = df.orderBy("fid").collect()
     assert rows[0]["SubClasses"] == "AcDbEntity:AcDbEllipse"
@@ -286,10 +287,10 @@ def test_distributed_parse_matches_driver_parse(spark, tmp_path):
     including file-order fids, across real multi-range splits."""
     from gdal_spark.sources import dxf as DXF
 
-    D = "/root/reference/autotest/ogr/data/"
     for fn in ["assorted.dxf", "LWPOLYLINE-OCS.dxf", "hatch.dxf"]:
-        a = DXF.read_dxf(spark, D + fn).orderBy("fid").collect()
-        b = DXF.read_dxf_distributed(spark, D + fn, n_ranges=5) \
+        path = reference_fixture(D + fn)
+        a = DXF.read_dxf(spark, path).orderBy("fid").collect()
+        b = DXF.read_dxf_distributed(spark, path, n_ranges=5) \
             .orderBy("fid").collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b], fn
 
@@ -300,7 +301,7 @@ def test_distributed_parse_multirange_alignment(spark, tmp_path):
     check the split parse is identical to the single-pass parse."""
     from gdal_spark.sources import dxf as DXF
 
-    src = open("/root/reference/autotest/ogr/data/assorted.dxf",
+    src = open(reference_fixture(D + "assorted.dxf"),
                encoding="latin-1").read()
     head, _, rest = src.partition("ENTITIES\n")
     body, _, tail = rest.partition("  0\nENDSEC")

@@ -14,9 +14,14 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import reference_fixture
 from gdal_spark.functions import geometry as G
 from gdal_spark.sources import formats as FMT
 from gdal_spark.sources import polygons as PG
+
+
+def _ogr(name: str) -> str:
+    return reference_fixture("ogr/data/" + name)
 
 
 def _wkbs():
@@ -176,13 +181,13 @@ def test_feature_lines_jvm_filter(spark):
 
 # --- GPX driver (autotest/ogr/ogr_gpx.py over data/test.gpx) -----------------
 
-GPX = "/root/reference/autotest/ogr/data/test.gpx"
+GPX = "ogr/data/test.gpx"
 
 
 def test_gpx_waypoints(spark):                              # ogr_gpx_1
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
-    df = FMT.read_gpx(spark, GPX, "waypoints").orderBy("fid")
+    df = FMT.read_gpx(spark, reference_fixture(GPX), "waypoints").orderBy("fid")
     rows = df.collect()
     assert [r["ele"] for r in rows] == [2.0, None]
     assert [r["name"] for r in rows] == ["waypoint name", None]
@@ -196,12 +201,12 @@ def test_gpx_waypoints(spark):                              # ogr_gpx_1
 def test_gpx_routes_and_points(spark):                      # ogr_gpx_2/3
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
-    df = FMT.read_gpx(spark, GPX, "routes").orderBy("fid")
+    df = FMT.read_gpx(spark, reference_fixture(GPX), "routes").orderBy("fid")
     rows = df.collect()
     assert G.wkt_from_wkb(bytes(rows[0]["geometry"])) == \
         "LINESTRING (6 5,9 8,12 11)"
     assert len(G.decode_linestring(bytes(rows[1]["geometry"]))) == 0
-    rp = FMT.read_gpx(spark, GPX, "route_points") \
+    rp = FMT.read_gpx(spark, reference_fixture(GPX), "route_points") \
         .orderBy("route_fid", "route_point_id").collect()
     assert [r["name"] for r in rp] == ["route point name", None, None]
     assert G.wkt_from_wkb(bytes(rp[0]["geometry"])) == "POINT (6 5)"
@@ -210,10 +215,10 @@ def test_gpx_routes_and_points(spark):                      # ogr_gpx_2/3
 def test_gpx_tracks_and_points(spark):                      # ogr_gpx_4/5
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
-    rows = FMT.read_gpx(spark, GPX, "tracks").orderBy("fid").collect()
+    rows = FMT.read_gpx(spark, reference_fixture(GPX), "tracks").orderBy("fid").collect()
     assert G.wkt_from_wkb(bytes(rows[0]["geometry"])) == \
         "MULTILINESTRING ((15 14,18 17),(21 20,24 23))"
-    tp = FMT.read_gpx(spark, GPX, "track_points") \
+    tp = FMT.read_gpx(spark, reference_fixture(GPX), "track_points") \
         .orderBy("track_fid", "track_seg_id", "track_pt_id").collect()
     assert tp[0]["name"] == "track point name"
     assert G.wkt_from_wkb(bytes(tp[0]["geometry"])) == "POINT (15 14)"
@@ -222,7 +227,7 @@ def test_gpx_tracks_and_points(spark):                      # ogr_gpx_4/5
 def test_gpx_roundtrip(spark, tmp_path):
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
-    src = FMT.read_gpx(spark, GPX, "waypoints")
+    src = FMT.read_gpx(spark, reference_fixture(GPX), "waypoints")
     out = str(tmp_path / "out.gpx")
     FMT.write_gpx(src, out, "waypoints")
     back = FMT.read_gpx(spark, out, "waypoints").orderBy("fid").collect()
@@ -233,15 +238,15 @@ def test_gpx_roundtrip(spark, tmp_path):
 
 # --- KML driver (autotest/ogr/ogr_kml.py over data/samples.kml) --------------
 
-KML = "/root/reference/autotest/ogr/data/samples.kml"
+KML = "ogr/data/samples.kml"
 
 
 def test_kml_layers_and_attributes(spark):    # ogr_kml_datastore/attributes_1
     from gdal_spark.sources import formats as FMT
-    names = FMT.kml_layer_names(KML)
+    names = FMT.kml_layer_names(reference_fixture(KML))
     assert len(names) == 6
     assert "Placemarks" in names
-    df = FMT.read_kml(spark, KML, "Placemarks").orderBy("fid")
+    df = FMT.read_kml(spark, reference_fixture(KML), "Placemarks").orderBy("fid")
     rows = df.collect()
     assert rows[0]["Name"] == "Simple placemark"
     assert rows[0]["description"][:23] == "Attached to the ground."
@@ -251,7 +256,8 @@ def test_kml_layers_and_attributes(spark):    # ogr_kml_datastore/attributes_1
 def test_kml_point_geometry(spark):                  # ogr_kml_point_read
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
-    rows = FMT.read_kml(spark, KML, "Placemarks").orderBy("fid").collect()
+    rows = FMT.read_kml(spark, reference_fixture(KML), "Placemarks") \
+        .orderBy("fid").collect()
     x, y = G.decode_point(bytes(rows[0]["geometry"]))
     assert (x, y) == pytest.approx((-122.0822035425683, 37.42228990140251))
 
@@ -259,7 +265,7 @@ def test_kml_point_geometry(spark):                  # ogr_kml_point_read
 def test_kml_roundtrip(spark, tmp_path):
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
-    src = FMT.read_kml(spark, KML, "Placemarks")
+    src = FMT.read_kml(spark, reference_fixture(KML), "Placemarks")
     out = str(tmp_path / "out.kml")
     FMT.write_kml(src, out)
     back = FMT.read_kml(spark, out).orderBy("fid").collect()
@@ -275,7 +281,7 @@ def test_kml_gpx_via_ogr2ogr(spark, tmp_path):
     from gdal_spark import apps as APP
     from gdal_spark.sources import formats as FMT
     out = str(tmp_path / "pm.gpx")
-    APP.ogr2ogr(spark, KML, out, layer="Placemarks",
+    APP.ogr2ogr(spark, reference_fixture(KML), out, layer="Placemarks",
                 reader_opts={})
     back = FMT.read_gpx(spark, out, "waypoints")
     assert back.count() == 3
@@ -283,13 +289,13 @@ def test_kml_gpx_via_ogr2ogr(spark, tmp_path):
 
 # --- MapInfo MIF/MID driver (ogr_mitab / ogr_sql_14) -------------------------
 
-MIF = "/root/reference/autotest/ogr/data/small.mif"
+MIF = "ogr/data/small.mif"
 
 
 def test_mif_read(spark):
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
-    rows = FMT.read_mif(spark, MIF).orderBy("fid").collect()
+    rows = FMT.read_mif(spark, reference_fixture(MIF)).orderBy("fid").collect()
     assert len(rows) == 2
     assert rows[0]["NAME"] == " S. 11th St."
     assert rows[0]["DATA"] == 4
@@ -308,7 +314,7 @@ def test_mif_ogr_style_sql(spark):                         # ogr_sql_14
     from gdal_spark.ogrsql import OGRSQLEngine
     from gdal_spark.sources import formats as FMT
     e = OGRSQLEngine(spark)
-    e.register("small", FMT.read_mif(spark, MIF))
+    e.register("small", FMT.read_mif(spark, reference_fixture(MIF)))
     df = e.execute_sql("select ogr_style from small "
                        "where ogr_geom_wkt LIKE 'POLYGON%'")
     expect = ('BRUSH(fc:#000000,bc:#ffffff,id:"mapinfo-brush-1,ogr-brush-1")'
@@ -325,7 +331,7 @@ def test_gml_wfs_read(spark):                               # ogr_gml_17 shape
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
     df = FMT.read_gml(
-        spark, "/root/reference/autotest/ogr/data/gnis_pop_100.gml")
+        spark, _ogr("gnis_pop_100.gml"))
     rows = df.orderBy("fid").collect()
     assert len(rows) == 20
     assert G.wkt_from_wkb(bytes(rows[0]["geometry"])) == "POINT (2.09 34.12)"
@@ -338,7 +344,7 @@ def test_gml_polygon_read(spark):                           # ionic_wfs
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources import formats as FMT
     df = FMT.read_gml(
-        spark, "/root/reference/autotest/ogr/data/ionic_wfs.gml")
+        spark, _ogr("ionic_wfs.gml"))
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0]["Name"] == "Aartselaar"
@@ -423,7 +429,7 @@ def test_gml_box_envelope():                     # gml_Box / gml_Envelope
 
 def test_gmt_multilinestring_read(spark):                  # ogr_gmt_4
     df = FMT.read_gmt(spark,
-                      "/root/reference/autotest/ogr/data/test_multi.gmt")
+                      _ogr("test_multi.gmt"))
     rows = df.orderBy("fid").collect()
     assert len(rows) == 2
     assert G.wkt_from_wkb(bytes(rows[0]["geometry"])) == \
@@ -437,10 +443,10 @@ def test_gmt_multilinestring_read(spark):                  # ogr_gmt_4
 
 def test_gmt_polygon_roundtrip(spark, tmp_path):           # ogr_gmt_2/3
     from gdal_spark.sources.vrt_vector import read_vrt_vector
+    poly = _ogr("poly.shp")
     src = read_vrt_vector(
         spark, '<OGRVRTDataSource><OGRVRTLayer name="poly">'
-        '<SrcDataSource relativeToVRT="0">'
-        '/root/reference/autotest/ogr/data/poly.shp</SrcDataSource>'
+        f'<SrcDataSource relativeToVRT="0">{poly}</SrcDataSource>'
         '</OGRVRTLayer></OGRVRTDataSource>')
     out = str(tmp_path / "tpoly.gmt")
     FMT.write_gmt(src, out)
@@ -476,24 +482,24 @@ def test_gmt_multipolygon_roundtrip(spark, tmp_path):      # ogr_gmt_5/6
 
 # --- BNA driver (autotest/ogr/ogr_bna.py over data/test.bna) -----------------
 
-BNA = "/root/reference/autotest/ogr/data/test.bna"
+BNA = "ogr/data/test.bna"
 
 
 def test_bna_points_and_lines(spark):                      # ogr_bna_1/2
-    pts = FMT.read_bna(spark, BNA, "points").collect()
+    pts = FMT.read_bna(spark, reference_fixture(BNA), "points").collect()
     assert [r["Primary ID"] for r in pts] == ["PID5", "PID4"]
     assert G.wkt_from_wkb(bytes(pts[0]["geometry"])) == \
         "POINT (573.736 476.563)"
     assert G.wkt_from_wkb(bytes(pts[1]["geometry"])) == \
         "POINT (532.991 429.121)"
-    lns = FMT.read_bna(spark, BNA, "lines").collect()
+    lns = FMT.read_bna(spark, reference_fixture(BNA), "lines").collect()
     assert [r["Primary ID"] for r in lns] == ["PID3"]
     assert G.wkt_from_wkb(bytes(lns[0]["geometry"])) == \
         "LINESTRING (224.598 307.425,333.043 341.461,396.629 304.952)"
 
 
 def test_bna_polygons(spark):                              # ogr_bna_3
-    pol = FMT.read_bna(spark, BNA, "polygons").collect()
+    pol = FMT.read_bna(spark, reference_fixture(BNA), "polygons").collect()
     assert [r["Primary ID"] for r in pol] == \
         ["PID2", "PID1", "PID7", "PID8"]
     assert G.wkt_from_wkb(bytes(pol[2]["geometry"])) == \
@@ -503,11 +509,11 @@ def test_bna_polygons(spark):                              # ogr_bna_3
 
 
 def test_bna_ellipses_and_roundtrip(spark, tmp_path):      # ogr_bna_4/write
-    ell = FMT.read_bna(spark, BNA, "ellipses").collect()
+    ell = FMT.read_bna(spark, reference_fixture(BNA), "ellipses").collect()
     assert [r["Primary ID"] for r in ell] == ["PID6"]
     assert ell[0]["Major radius"] == 100.0
     for lay in ("points", "lines", "polygons", "ellipses"):
-        src = FMT.read_bna(spark, BNA, lay)
+        src = FMT.read_bna(spark, reference_fixture(BNA), lay)
         out = str(tmp_path / f"out_{lay}.bna")
         FMT.write_bna(src, out)
         back = FMT.read_bna(spark, out, lay)
@@ -521,7 +527,7 @@ def test_bna_ellipses_and_roundtrip(spark, tmp_path):      # ogr_bna_4/write
 
 # --- GeoRSS driver (autotest/ogr/ogr_georss.py) ------------------------------
 
-GEORSS_D = "/root/reference/autotest/ogr/data/"
+GEORSS_D = "ogr/data/"
 GEORSS_WKTS = [
     "POINT (2 49)",
     "LINESTRING (2 48,2.1 48.1,2.2 48)",
@@ -533,7 +539,8 @@ GEORSS_WKTS = [
 @pytest.mark.parametrize("fn", ["test_georss_simple.xml",
                                 "test_georss_gml.xml"])
 def test_georss_rss_read(spark, fn):                   # ogr_georss_2/3
-    rows = FMT.read_georss(spark, GEORSS_D + fn).orderBy("fid").collect()
+    rows = FMT.read_georss(spark, reference_fixture(GEORSS_D + fn)) \
+        .orderBy("fid").collect()
     assert [G.wkt_from_wkb(bytes(r["geometry"])) for r in rows] == \
         GEORSS_WKTS
     r = rows[0]
@@ -568,14 +575,14 @@ ATOM_FIELDS = [
 @pytest.mark.parametrize("fn", ["atom_rfc_sample.xml",
                                 "atom_rfc_sample_atom_ns.xml"])
 def test_georss_atom_read(spark, fn):         # ogr_georss_1/_atom_ns
-    r = FMT.read_georss(spark, GEORSS_D + fn).collect()[0]
+    r = FMT.read_georss(spark, reference_fixture(GEORSS_D + fn)).collect()[0]
     for k, v in ATOM_FIELDS:
         assert r[k] == v, (k, r[k], v)
     assert '<div xmlns="http://www.w3.org/1999/xhtml">' in r["content"]
 
 
 def test_georss_rss_write_roundtrip(spark, tmp_path):  # ogr_georss_4
-    src = FMT.read_georss(spark, GEORSS_D + "test_georss_simple.xml")
+    src = FMT.read_georss(spark, reference_fixture(GEORSS_D + "test_georss_simple.xml"))
     out = str(tmp_path / "rt.xml")
     FMT.write_georss(src, out)
     back = FMT.read_georss(spark, out)
@@ -588,7 +595,7 @@ def test_georss_rss_write_roundtrip(spark, tmp_path):  # ogr_georss_4
 
 
 def test_georss_atom_write_roundtrip(spark, tmp_path):  # ogr_georss_1bis/ter
-    src = FMT.read_georss(spark, GEORSS_D + "atom_rfc_sample.xml")
+    src = FMT.read_georss(spark, reference_fixture(GEORSS_D + "atom_rfc_sample.xml"))
     out = str(tmp_path / "atom.xml")
     FMT.write_georss(src, out, use_atom=True)
     r = FMT.read_georss(spark, out).collect()[0]
@@ -600,23 +607,22 @@ def test_georss_atom_write_roundtrip(spark, tmp_path):  # ogr_georss_1bis/ter
 # --- Arc Generate + HTF drivers (ogr_arcgen.py / ogr_htf.py) -----------------
 
 def test_arcgen(spark):                                    # ogr_arcgen_1..6
-    D = "/root/reference/autotest/ogr/data/"
-    pts = FMT.read_arcgen(spark, D + "points.gen").orderBy("fid").collect()
+    pts = FMT.read_arcgen(spark, _ogr("points.gen")).orderBy("fid").collect()
     assert [(r["ID"], G.wkt_from_wkb(bytes(r["geometry"]))) for r in pts] \
         == [(1, "POINT (2 49)"), (2, "POINT (3 50)")]
-    lns = FMT.read_arcgen(spark, D + "lines.gen").orderBy("fid").collect()
+    lns = FMT.read_arcgen(spark, _ogr("lines.gen")).orderBy("fid").collect()
     assert G.wkt_from_wkb(bytes(lns[0]["geometry"])) == \
         "LINESTRING (2 49,3 50)"
-    pol = FMT.read_arcgen(spark, D + "polygons.gen").collect()
+    pol = FMT.read_arcgen(spark, _ogr("polygons.gen")).collect()
     assert G.wkt_from_wkb(bytes(pol[0]["geometry"])) == \
         "POLYGON ((2 49,2 50,3 50,3 49,2 49))"
     # 25d variants parse too (Z drops at the engine's 2-D WKB)
-    p25 = FMT.read_arcgen(spark, D + "points25d.gen").collect()
+    p25 = FMT.read_arcgen(spark, _ogr("points25d.gen")).collect()
     assert G.wkt_from_wkb(bytes(p25[0]["geometry"])) == "POINT (2 49)"
 
 
 def test_htf(spark):                                       # ogr_htf_1
-    P = "/root/reference/autotest/ogr/data/test.htf"
+    P = _ogr("test.htf")
     pol = FMT.read_htf(spark, P, "polygon").orderBy("fid").collect()
     assert G.wkt_from_wkb(bytes(pol[0]["geometry"])) == (
         "POLYGON ((320830 7678810,350840 7658030,308130 7595560,"
@@ -636,8 +642,8 @@ def test_htf(spark):                                       # ogr_htf_1
 
 @pytest.mark.parametrize("fn", ["test.segp1", "test.ukooa"])
 def test_segukooa(spark, fn):                       # ogr_segp1/ukooa_points+lines
-    D = "/root/reference/autotest/ogr/data/"
-    pts = FMT.read_segukooa(spark, D + fn, "points").orderBy("fid").collect()
+    path = _ogr(fn)
+    pts = FMT.read_segukooa(spark, path, "points").orderBy("fid").collect()
     r = pts[0]
     assert r["LINENAME"] == "firstline"
     assert r["POINTNUMBER"] == 10
@@ -647,7 +653,7 @@ def test_segukooa(spark, fn):                       # ogr_segp1/ukooa_points+lin
     if fn == "test.segp1":
         assert r["RESHOOTCODE"] == " "
     assert G.wkt_from_wkb(bytes(r["geometry"])) == "POINT (2 49)"
-    lns = FMT.read_segukooa(spark, D + fn, "lines").orderBy("fid").collect()
+    lns = FMT.read_segukooa(spark, path, "lines").orderBy("fid").collect()
     assert [l["LINENAME"] for l in lns] == ["firstline", "secondline"]
     assert G.wkt_from_wkb(bytes(lns[0]["geometry"])) == \
         "LINESTRING (2 49,2 49.5)"
@@ -658,7 +664,7 @@ def test_segukooa(spark, fn):                       # ogr_segp1/ukooa_points+lin
 # --- GPS TrackMaker GTM (ogr_gtm.py) -----------------------------------------
 
 def test_gtm(spark):                                   # ogr_gtm_read_1/2
-    P = "/root/reference/autotest/ogr/data/samplemap.gtm"
+    P = _ogr("samplemap.gtm")
     w = FMT.read_gtm(spark, P, "waypoints").orderBy("fid").collect()
     assert len(w) == 3
     assert w[0]["name"] == "WAY6"
@@ -684,12 +690,12 @@ def test_gpx_distributed_matches_driver(spark, tmp_path):
     """Executor-side waypoint parse is row-identical to the driver
     parse, across genuine multi-range splits (waypoint block tiled
     past several 64 KiB range floors)."""
-    a = FMT.read_gpx(spark, GPX, "waypoints").orderBy("fid").collect()
-    b = FMT.read_gpx_distributed(spark, GPX, n_ranges=4) \
+    a = FMT.read_gpx(spark, reference_fixture(GPX), "waypoints").orderBy("fid").collect()
+    b = FMT.read_gpx_distributed(spark, reference_fixture(GPX), n_ranges=4) \
         .orderBy("fid").collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
-    src = open(GPX, encoding="utf-8").read()
+    src = open(reference_fixture(GPX), encoding="utf-8").read()
     i0 = src.index("<wpt")
     i1 = src.index("<rte>")  # covers both wpt forms incl. self-closing
     big = src[:i0] + src[i0:i1] * 400 + src[i1:]
@@ -707,7 +713,7 @@ def test_shapefile_z_types(spark):                     # ogr_shape_60
     reference drops M (no M support in its 2.0-era core) and keeps Z."""
     from gdal_spark.functions import geometry as G
     from gdal_spark.sources.formats import parse_shp
-    data = open("/root/reference/autotest/ogr/data/testpointzm.shp",
+    data = open(_ogr("testpointzm.shp"),
                 "rb").read()
     geoms = parse_shp(data)
     assert [G.wkt_from_wkb(g) for g in geoms] == ["POINT (1 2 3)"]
@@ -748,11 +754,7 @@ def test_shapefile_z_synthetic_roundtrip(spark):
 def test_gml_wfs11_feature_members(spark):
     # WFS 1.1 gml:featureMembers (plural) + gml:pos points
     # (autotest/ogr/data/archsites.gml)
-    import os
-    path = "/root/reference/autotest/ogr/data/archsites.gml"
-    if not os.path.exists(path):
-        import pytest
-        pytest.skip("reference autotest data not present")
+    path = _ogr("archsites.gml")
     from gdal_spark.functions.geometry import wkt_from_wkb
     df = FMT.read_gml(spark, path)
     rows = df.collect()
@@ -767,14 +769,10 @@ def test_gml_wfs11_feature_members(spark):
 def test_shapefile_corrupt_records_null_geometry(spark):
     # ogr_shape.py corrupt-geometry fixtures: the feature exists, its
     # geometry reads as NULL (the reference quiets a per-feature error)
-    import os
-    D = "/root/reference/autotest/ogr/data"
-    if not os.path.exists(f"{D}/buggypoint.shp"):
-        import pytest
-        pytest.skip("reference autotest data not present")
     for name in ("buggypoint", "buggymultipoint", "buggymultiline",
                  "buggymultipoly", "buggymultipoly2"):
-        rows = FMT.read_shapefile(spark, f"{D}/{name}.shp").collect()
+        rows = FMT.read_shapefile(
+            spark, _ogr(f"{name}.shp")).collect()
         assert len(rows) == 1, name
         assert rows[0]["geometry"] is None, name
 
@@ -782,27 +780,23 @@ def test_shapefile_corrupt_records_null_geometry(spark):
 def test_csv_csvt_and_aspatial(spark):
     # .csvt sidecar typing (ogr_csv testcsvt.csv) + aspatial tables +
     # UTF-8 BOM headers
-    import os
-    D = "/root/reference/autotest/ogr/data"
-    if not os.path.exists(f"{D}/testcsvt.csv"):
-        import pytest
-        pytest.skip("reference autotest data not present")
-    df = FMT.read_csv_features(spark, f"{D}/testcsvt.csv", wkt_col=None)
+    df = FMT.read_csv_features(spark, _ogr("testcsvt.csv"),
+                               wkt_col=None)
     assert dict(df.dtypes)["INTCOL"] == "bigint"
     assert dict(df.dtypes)["REALCOL"] == "double"
     r = df.collect()[0]
     assert r["INTCOL"] == 12 and r["REALCOL"] == 5.7
     assert r["STRINGCOL"] == "foo"
-    bom = FMT.read_csv_features(spark, f"{D}/csv_with_utf8_bom.csv",
-                                wkt_col=None)
+    bom = FMT.read_csv_features(
+        spark, _ogr("csv_with_utf8_bom.csv"), wkt_col=None)
     assert bom.columns[0] == "id"
     assert bom.count() == 2
 
 
 def test_kml_distributed_matches_driver(spark):
     # executor-side Placemark parse == the driver parse, byte for byte
-    a = FMT.read_kml(spark, KML).orderBy("fid").collect()
-    b = FMT.read_kml_distributed(spark, KML, n_ranges=4) \
+    a = FMT.read_kml(spark, reference_fixture(KML)).orderBy("fid").collect()
+    b = FMT.read_kml_distributed(spark, reference_fixture(KML), n_ranges=4) \
         .orderBy("fid").collect()
     assert len(a) == len(b) == 20
     for x, y in zip(a, b):

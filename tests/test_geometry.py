@@ -138,3 +138,13 @@ def test_wkt_empty_point_and_linestring():
     # multi kinds already worked; keep them covered
     assert G.wkb_from_wkt("MULTIPOINT EMPTY") is not None
     assert G.wkb_from_wkt("POLYGON EMPTY") is not None
+
+
+def test_contains_batch_empty_batch():
+    sq = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=float)
+    prep = G.PreparedPolygons([7], [G.encode_polygon([sq])])
+    for _ in range(2):  # before and after the cell index exists
+        pi, gi = prep.contains_batch(np.empty(0), np.empty(0))
+        assert pi.dtype == gi.dtype == np.int64
+        assert len(pi) == len(gi) == 0
+        prep.contains_batch(np.array([5.0]), np.array([5.0]))

@@ -11,6 +11,7 @@ import zlib
 import numpy as np
 import pytest
 
+from conftest import reference_fixture
 from gdal_spark.raster import imagecodec as IC
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
@@ -418,7 +419,7 @@ def test_png_adam7_reference_golden():
     Adam7 (interlace byte 1), and its band checksums are pinned across
     the reference suite (webp.py:139, test_gdal_calc.py:82-85 expect
     12603/58561 for bands 1-2)."""
-    data = open("/root/reference/autotest/gcore/data/stefan_full_rgba.png",
+    data = open(reference_fixture("gcore/data/stefan_full_rgba.png"),
                 "rb").read()
     assert data[28] == 1  # interlaced
     img = IC.png_decode(data)

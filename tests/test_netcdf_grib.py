@@ -9,15 +9,18 @@ twin.
 import numpy as np
 import pytest
 
+from conftest import reference_fixture
 from gdal_spark.raster import grib as GB
 from gdal_spark.raster import netcdf as NC
 from gdal_spark.raster.checksum import checksum, py_checksum
 
-D = "/root/reference/autotest/gdrivers/data/"
+
+def _gd(name: str) -> str:
+    return reference_fixture("gdrivers/data/" + name)
 
 
 def _nc(fn, var=None):
-    data = open(D + fn, "rb").read()
+    data = open(_gd(fn), "rb").read()
     return data, NC.describe(data, var)
 
 
@@ -96,14 +99,14 @@ def test_netcdf_5d_band_unroll():                         # netcdf_4/5
 
 
 def test_netcdf_subdataset_ignore_bounds():               # netcdf_37 open
-    data = open(D + "reduce-cgcms.nc", "rb").read()
+    data = open(_gd("reduce-cgcms.nc"), "rb").read()
     nc = NC.parse_cdf(data)
     assert NC.raster_vars(nc) == ["tas"]
 
 
 def test_netcdf_spark_read(spark):
     tiles, meta = NC.read_netcdf(
-        spark, D + "bug636.nc", "tas")
+        spark, _gd("bug636.nc"), "tas")
     row = checksum(tiles, meta).collect()[0]
     assert row["checksum"] == 31621
 
@@ -111,7 +114,7 @@ def test_netcdf_spark_read(spark):
 # --- GRIB -----------------------------------------------------------------
 
 def _grib_band(fn, band):
-    data = open(D + fn, "rb").read()
+    data = open(_gd(fn), "rb").read()
     msgs = GB.scan_messages(data)
     return GB.decode_message(data, *msgs[band - 1])
 
@@ -126,7 +129,7 @@ def test_grib2_ndfd_mint_checksum():                      # grib_1
 
 
 def test_grib2_normalize_units_off():                     # grib_5
-    data = open(D + "ds.mint.bin", "rb").read()
+    data = open(_gd("ds.mint.bin"), "rb").read()
     msgs = GB.scan_messages(data)
     arr, _ = GB.decode_message(data, *msgs[0], normalize_units=False)
     v = arr[arr != 9999.0]
@@ -139,7 +142,7 @@ def test_grib1_quikscat_checksum():                       # grib_2
 
 
 def test_grib1_multisize_partial():                       # grib_3
-    data = open(D + "bug3246.grb", "rb").read()
+    data = open(_gd("bug3246.grb"), "rb").read()
     msgs = GB.scan_messages(data)
     assert len(msgs) == 12
     a1, _ = GB.decode_message(data, *msgs[0])
@@ -155,7 +158,7 @@ def test_grib2_one_one_gt():                              # grib_6
 
 
 def test_grib_spark_read(spark):
-    tiles, meta = GB.read_grib(spark, D + "ds.mint.bin")
+    tiles, meta = GB.read_grib(spark, _gd("ds.mint.bin"))
     assert meta.nodata == 9999.0
     rows = {r["band"]: r["checksum"]
             for r in checksum(tiles, meta).collect()}
@@ -163,7 +166,7 @@ def test_grib_spark_read(spark):
 
 
 def test_grib_mismatched_band_spark(spark):
-    tiles, meta = GB.read_grib(spark, D + "bug3246.grb")
+    tiles, meta = GB.read_grib(spark, _gd("bug3246.grb"))
     assert (meta.width, meta.height) == (103, 78)
     b4 = tiles.filter("band = 3")
     row = checksum(b4, meta).collect()[0]
@@ -174,16 +177,16 @@ def test_grib_mismatched_band_spark(spark):
 
 def test_hdf5_subdataset_order():                         # hdf5_2
     from gdal_spark.raster import hdf5 as H5
-    data = open(D + "groups.h5", "rb").read()
+    data = open(_gd("groups.h5"), "rb").read()
     assert H5.subdatasets(data) == ["/MyGroup/Group_A/dset2",
                                     "/MyGroup/dset1"]
 
 
 def test_hdf5_checksums():                                # hdf5_3/4/5
     from gdal_spark.raster import hdf5 as H5
-    data = open(D + "u8be.h5", "rb").read()
+    data = open(_gd("u8be.h5"), "rb").read()
     assert py_checksum(H5.read_band(data, "/TestArray")) == 135
-    data = open(D + "groups.h5", "rb").read()
+    data = open(_gd("groups.h5"), "rb").read()
     assert py_checksum(H5.read_band(data, "/MyGroup/dset1")) == 18
 
 
@@ -192,7 +195,7 @@ def test_hdf5_chunked_btree():
     import numpy as np
 
     from gdal_spark.raster import hdf5 as H5
-    data = open(D + "CSK_DGM.h5", "rb").read()
+    data = open(_gd("CSK_DGM.h5"), "rb").read()
     h5 = H5.H5File(data)
     ds = h5.datasets["/S01/SBI"]
     assert ds.layout == "chunked" and ds.chunk_dims[:2] == (16, 16)
@@ -203,7 +206,7 @@ def test_hdf5_chunked_btree():
 def test_hdf5_spark_read(spark):
     from gdal_spark.apps import open_raster
     from gdal_spark.raster.checksum import checksum
-    t, m = open_raster(spark, f'HDF5:"{D}u8be.h5"://TestArray')
+    t, m = open_raster(spark, f'HDF5:"{_gd("u8be.h5")}"://TestArray')
     assert (m.width, m.height) == (5, 6)
     assert checksum(t, m).collect()[0]["checksum"] == 135
 
@@ -212,7 +215,7 @@ def test_hdf5_spark_read(spark):
 
 def test_hdf4_sds_scan():
     from gdal_spark.raster import hdf4 as H4
-    data = open(D + "hdifftst2.hdf", "rb").read()
+    data = open(_gd("hdifftst2.hdf"), "rb").read()
     h4 = H4.H4File(data)
     assert [s.name for s in h4.sds] == ["dset1", "dset2", "dset3"]
     assert all(s.dims == (3, 2) and s.dtype == ">i4" for s in h4.sds)
@@ -225,7 +228,7 @@ def test_hdf4_sds_scan():
 def test_hdf4_spark_read(spark):
     from gdal_spark.apps import open_raster
     t, m = open_raster(
-        spark, f'HDF4_SDS:UNKNOWN:"{D}hdifftst2.hdf":2')
+        spark, f'HDF4_SDS:UNKNOWN:"{_gd("hdifftst2.hdf")}":2')
     assert (m.width, m.height) == (2, 3)
     from gdal_spark.raster.model import to_array
     arr = to_array(t, m)
@@ -234,14 +237,9 @@ def test_hdf4_spark_read(spark):
 
 def test_gmt_grid(spark):
     # autotest/gdrivers/gmt.py gmt_1: checksum 34762
-    import os
     from gdal_spark.raster.checksum import py_checksum
     from gdal_spark.raster.model import to_array
     from gdal_spark.raster.netcdf import read_gmt
-    path = "/root/reference/autotest/gdrivers/data/gmt_1.grd"
-    if not os.path.exists(path):
-        import pytest
-        pytest.skip("reference autotest data not present")
-    df, meta = read_gmt(spark, path)
+    df, meta = read_gmt(spark, _gd("gmt_1.grd"))
     assert (meta.width, meta.height) == (50, 50)
     assert py_checksum(to_array(df, meta)) == 34762

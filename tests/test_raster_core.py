@@ -8,6 +8,7 @@ integer paths.
 import numpy as np
 import pytest
 
+from conftest import reference_fixture
 from gdal_spark.raster import checksum as CK
 from gdal_spark.raster import model as M
 from gdal_spark.raster import pyramid as PY
@@ -354,7 +355,7 @@ def test_mask_all_valid_golden(spark):
     from gdal_spark.raster import formats as FM
     from gdal_spark.raster import mask as MK
     from gdal_spark.raster.checksum import py_checksum
-    path = "/root/reference/autotest/gcore/data/byte.tif"
+    path = reference_fixture("gcore/data/byte.tif")
     bands, meta = FM.parse_geotiff(open(path, "rb").read())
     tiles = M.from_array(spark, bands[0], meta)
     assert MK.mask_flags(meta) == MK.GMF_ALL_VALID
@@ -369,7 +370,7 @@ def test_mask_nodata_golden(spark):
     from gdal_spark.raster import vrt as VRT
     from gdal_spark.raster.checksum import py_checksum
     tiles, meta = VRT.read_vrt(
-        spark, "/root/reference/autotest/gcore/data/byte.vrt")
+        spark, reference_fixture("gcore/data/byte.vrt"))
     assert meta.nodata == 107.0
     assert MK.mask_flags(meta) == MK.GMF_NODATA
     mt, mm = MK.mask_band(tiles, meta)
@@ -384,7 +385,7 @@ def test_mask_alpha_golden(spark):
     from gdal_spark.raster import mask as MK
     from gdal_spark.raster.checksum import py_checksum
     img = IC.png_decode(open(
-        "/root/reference/autotest/gcore/data/stefan_full_rgba.png",
+        reference_fixture("gcore/data/stefan_full_rgba.png"),
         "rb").read())
     meta = M.RasterMeta("rgba", img.shape[1], img.shape[0], dtype="uint8")
     tiles = None

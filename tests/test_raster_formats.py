@@ -6,9 +6,18 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from conftest import reference_fixture
 from gdal_spark.raster import formats as RF
 from gdal_spark.raster import model as M
 from gdal_spark.raster.checksum import checksum
+
+
+def _gcore(name: str) -> str:
+    return reference_fixture("gcore/data/" + name)
+
+
+def _gd(name: str) -> str:
+    return reference_fixture("gdrivers/data/" + name)
 
 
 def _meta(rid, w, h, dtype="uint8", block=8, nodata=None):
@@ -294,8 +303,6 @@ def test_bigtiff_streaming_sink(spark, tmp_path):
 # libjpeg-exact baseline decoder (raster/jpegcodec.py)
 # ---------------------------------------------------------------------------
 
-GCORE = "/root/reference/autotest/gcore/data"
-
 
 def _cks(path, block=256):
     from gdal_spark.raster.checksum import py_checksum
@@ -306,8 +313,8 @@ def _cks(path, block=256):
 def test_jpeg_in_tiff_jpegtables_golden():
     """gdal/autotest/gcore/tiff_write.py tiff_write_130 expectations:
     both JPEGTables styles decode to the exact reference checksums."""
-    assert _cks(f"{GCORE}/byte_jpg_unusual_jpegtable.tif") == [4771]
-    assert _cks(f"{GCORE}/byte_jpg_tablesmodezero.tif") == [4743]
+    assert _cks(_gcore("byte_jpg_unusual_jpegtable.tif")) == [4771]
+    assert _cks(_gcore("byte_jpg_tablesmodezero.tif")) == [4743]
 
 
 def test_jpeg_in_tiff_rgba_golden():
@@ -315,15 +322,15 @@ def test_jpeg_in_tiff_rgba_golden():
     4-component (no color transform) JPEG, both pixel- and
     band-interleaved organizations."""
     exp = [16404, 62700, 37913, 14174]
-    assert _cks(f"{GCORE}/stefan_full_rgba_jpeg_contig.tif") == exp
-    assert _cks(f"{GCORE}/stefan_full_rgba_jpeg_separate.tif") == exp
+    assert _cks(_gcore("stefan_full_rgba_jpeg_contig.tif")) == exp
+    assert _cks(_gcore("stefan_full_rgba_jpeg_separate.tif")) == exp
 
 
 def test_jpeg_in_tiff_ycbcr_strips():
     """w_jpeg.tiff: strip-organized YCbCr JPEG — decodes to 3 RGB bands
     of the right shape (self-golden: pinned checksums guard refactors)."""
     bands, meta = RF.parse_geotiff(
-        open("/root/reference/autotest/utilities/data/w_jpeg.tiff",
+        open(reference_fixture("utilities/data/w_jpeg.tiff"),
              "rb").read(), "w", 256)
     assert (meta.width, meta.height) == (512, 256)
     from gdal_spark.raster.checksum import py_checksum
@@ -390,7 +397,7 @@ def test_jpeg_in_tiff_12bit_golden():
     JPEG-in-TIFF fixture opens as UInt16 and band 1's mean falls in the
     reference's accepted band (2150, 2180)."""
     bands, meta = RF.parse_geotiff(
-        open(f"{GCORE}/mandrilmini_12bitjpeg.tif", "rb").read(), "m", 256)
+        open(_gcore("mandrilmini_12bitjpeg.tif"), "rb").read(), "m", 256)
     assert meta.dtype == "uint16" and len(bands) == 3
     assert bands[0].max() <= 4095
     assert 2150 < bands[0].mean() < 2180
@@ -455,7 +462,7 @@ def test_xyz_roundtrip_byte(spark, tmp_path):
     from gdal_spark.raster import formats as FM
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
-    path = "/root/reference/autotest/gcore/data/byte.tif"
+    path = _gcore("byte.tif")
     bands, meta = FM.parse_geotiff(open(path, "rb").read())
     tiles = M.from_array(spark, bands[0], meta)
     out = str(tmp_path / "byte.xyz")
@@ -474,7 +481,7 @@ def test_ehdr_read_float32_golden(spark):
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
     t, m = FM.read_ehdr(
-        spark, "/root/reference/autotest/gdrivers/data/float32.bil")
+        spark, _gd("float32.bil"))
     assert (m.width, m.height) == (20, 20) and m.dtype == "float32"
     assert m.gt == pytest.approx((440720.0, 60.0, 0.0, 3751320.0, 0.0, -60.0))
     assert py_checksum(M.to_array(t, m)) == 27
@@ -487,7 +494,7 @@ def test_ehdr_roundtrip_byte(spark, tmp_path):
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
     bands, meta = FM.parse_geotiff(open(
-        "/root/reference/autotest/gcore/data/byte.tif", "rb").read())
+        _gcore("byte.tif"), "rb").read())
     tiles = M.from_array(spark, bands[0], meta)
     out = str(tmp_path / "byte.bil")
     FM.write_ehdr(tiles, meta, out)
@@ -506,7 +513,7 @@ def test_bt_roundtrip_goldens(spark, tmp_path, src, dtype):
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
     bands, meta = FM.parse_geotiff(open(
-        f"/root/reference/autotest/gcore/data/{src}", "rb").read())
+        _gcore(src), "rb").read())
     tiles = M.from_array(spark, bands[0], meta)
     out = str(tmp_path / (src + ".bt"))
     FM.write_bt(tiles, meta, out)
@@ -523,7 +530,7 @@ def test_envi_read_golden(spark):
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
     t, m = FM.read_envi(
-        spark, "/root/reference/autotest/gdrivers/data/aea.dat")
+        spark, _gd("aea.dat"))
     assert (m.width, m.height) == (434, 3)
     assert m.gt == pytest.approx(
         (-936408.178, 28.5, 0.0, 2423902.344, 0.0, -28.5))
@@ -536,7 +543,7 @@ def test_envi_roundtrip(spark, tmp_path):
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
     t, m = FM.read_envi(
-        spark, "/root/reference/autotest/gdrivers/data/aea.dat")
+        spark, _gd("aea.dat"))
     out = str(tmp_path / "aea.dat")
     FM.write_envi(t, m, out)
     t2, m2 = FM.read_envi(spark, out)
@@ -554,7 +561,7 @@ def test_srtmhgt_golden(spark, tmp_path):
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
     arr, _ = FM.parse_dted(open(
-        "/root/reference/autotest/gdrivers/data/n43.dt0", "rb").read())
+        _gd("n43.dt0"), "rb").read())
     idx = np.floor((np.arange(1201) + 0.5) * (121 / 1201.0)).astype(int)
     up = arr[np.ix_(idx, idx)].astype(np.int16)
     meta = M.RasterMeta(
@@ -586,7 +593,7 @@ def test_srtmhgt_golden(spark, tmp_path):
 ])
 def test_usgsdem_goldens(spark, fn, cs, gt):    # usgsdem_1/2/3/8/9
     tiles, meta = RF.read_usgsdem(
-        spark, "/root/reference/autotest/gdrivers/data/" + fn)
+        spark, _gd(fn))
     assert checksum(tiles, meta).collect()[0]["checksum"] == cs
     if gt is not None:
         assert all(abs(a - b) < 1e-7 for a, b in zip(meta.gt, gt))
@@ -602,7 +609,7 @@ def test_usgsdem_goldens(spark, fn, cs, gt):    # usgsdem_1/2/3/8/9
 def test_surfer_grid_goldens(spark, tmp_path, fn, rd, wr):
     want_gt = (440720, 60, 0, 3751320, 0, -60)
     tiles, meta = getattr(RF, rd)(
-        spark, "/root/reference/autotest/gdrivers/data/" + fn)
+        spark, _gd(fn))
     assert checksum(tiles, meta).collect()[0]["checksum"] == 4672
     assert all(abs(a - b) < 1e-9 for a, b in zip(meta.gt, want_gt))
     out = str(tmp_path / fn)
@@ -623,7 +630,7 @@ def test_surfer_grid_goldens(spark, tmp_path, fn, rd, wr):
 ])
 def test_lcp_goldens(spark, fn, want_cs, want_gt):      # lcp_1/lcp_2
     tiles, meta, md = RF.read_lcp(
-        spark, "/root/reference/autotest/gdrivers/data/" + fn)
+        spark, _gd(fn))
     cs = {r["band"]: r["checksum"] for r in checksum(tiles, meta).collect()}
     assert [cs[i] for i in range(len(want_cs))] == want_cs
     if want_gt:
@@ -642,7 +649,7 @@ def test_lcp_goldens(spark, fn, want_cs, want_gt):      # lcp_1/lcp_2
 
 def test_saga_golden_and_roundtrip(spark, tmp_path):    # saga_1/saga_2
     tiles, meta = RF.read_saga(
-        spark, "/root/reference/autotest/gdrivers/data/4byteFloat.sdat")
+        spark, _gd("4byteFloat.sdat"))
     assert checksum(tiles, meta).collect()[0]["checksum"] == 108
     assert meta.gt == (328.3, 10.0, 0.0, 650.5, 0.0, -10.0)
     out = str(tmp_path / "copy.sdat")
@@ -654,17 +661,16 @@ def test_saga_golden_and_roundtrip(spark, tmp_path):    # saga_1/saga_2
 
 def test_gtx_golden(spark):                             # gtx_1
     tiles, meta = RF.read_gtx(
-        spark, "/root/reference/autotest/gdrivers/data/hydroc1.gtx")
+        spark, _gd("hydroc1.gtx"))
     assert checksum(tiles, meta).collect()[0]["checksum"] == 64183
     want = (276.725, 0.05, 0.0, 42.775, 0.0, -0.05)
     assert all(abs(a - b) < 1e-9 for a, b in zip(meta.gt, want))
 
 
 def test_idrisi_goldens_and_roundtrip(spark, tmp_path):  # idrisi_1/2
-    D = "/root/reference/autotest/gdrivers/data/"
-    tiles, meta = RF.read_idrisi(spark, D + "byte.rst")
+    tiles, meta = RF.read_idrisi(spark, _gd("byte.rst"))
     assert checksum(tiles, meta).collect()[0]["checksum"] == 5044
-    t2, m2 = RF.read_idrisi(spark, D + "real.rst")
+    t2, m2 = RF.read_idrisi(spark, _gd("real.rst"))
     assert checksum(t2, m2).collect()[0]["checksum"] == 5275
     out = str(tmp_path / "copy.rst")
     RF.write_idrisi(tiles, meta, out)
@@ -677,47 +683,44 @@ def test_small_classic_formats(spark):
     """ELAS / Erdas LAN (8-bit + 4-bit) / GRASS ASCII / ERMapper ERS
     read goldens (autotest/gdrivers elas_1, lan_1/2, grassasciigrid_1,
     ers_1)."""
-    D = "/root/reference/autotest/gdrivers/data/"
-    t, m = RF.read_elas(spark, D + "byte_elas.bin")
+    t, m = RF.read_elas(spark, _gd("byte_elas.bin"))
     assert checksum(t, m).collect()[0]["checksum"] == 4672
-    t, m = RF.read_lan(spark, D + "fakelan.lan")
+    t, m = RF.read_lan(spark, _gd("fakelan.lan"))
     assert checksum(t, m).collect()[0]["checksum"] == 10
-    t, m = RF.read_lan(spark, D + "fakelan4bit.lan")
+    t, m = RF.read_lan(spark, _gd("fakelan4bit.lan"))
     assert checksum(t, m).collect()[0]["checksum"] == 10
-    t, m = RF.read_grass_ascii(spark, D + "grassascii.txt")
+    t, m = RF.read_grass_ascii(spark, _gd("grassascii.txt"))
     assert checksum(t, m).collect()[0]["checksum"] == 212
     assert m.gt == (-100.0, 62.5, 0.0, 250.0, 0.0, -41.666666666666664)
-    t, m = RF.read_ers(spark, D + "srtm.ers")
+    t, m = RF.read_ers(spark, _gd("srtm.ers"))
     assert checksum(t, m).collect()[0]["checksum"] == 64074
 
 
 def test_batch2_classic_formats(spark):
     """ROI_PAC / NGSGEOID (both endians) / E00 grid / ILWIS read goldens
     (autotest/gdrivers roipac_1, ngsgeoid_1/2, e00grid_1, ilwis_1)."""
-    D = "/root/reference/autotest/gdrivers/data/"
-    t, m = RF.read_roipac(spark, D + "srtm.dem")
+    t, m = RF.read_roipac(spark, _gd("srtm.dem"))
     assert checksum(t, m).collect()[0]["checksum"] == 64074
     assert abs(m.gt[0] - -180.0083333) < 1e-7 and m.gt[1] > 0
-    t, m = RF.read_ngsgeoid(spark, D + "g2009u01_le_truncated.bin")
+    t, m = RF.read_ngsgeoid(spark, _gd("g2009u01_le_truncated.bin"))
     assert checksum(t, m).collect()[0]["checksum"] == 65534
     want = (229.99166666666667, 0.01666666666667, 0.0,
             40.00833333333334, 0.0, -0.01666666666667)
     assert all(abs(a - b) < 1e-9 for a, b in zip(m.gt, want))
-    t, m = RF.read_ngsgeoid(spark, D + "g2009u01_be_truncated.bin")
+    t, m = RF.read_ngsgeoid(spark, _gd("g2009u01_be_truncated.bin"))
     assert checksum(t, m).collect()[0]["checksum"] == 65534
-    t, m = RF.read_e00grid(spark, D + "fake_e00grid.e00")
+    t, m = RF.read_e00grid(spark, _gd("fake_e00grid.e00"))
     assert checksum(t, m).collect()[0]["checksum"] == 65359
     assert m.gt == (500000.0, 1000.0, 0.0, 4000000.0, 0.0, -1000.0)
     assert m.nodata == -32767
-    t, m = RF.read_ilwis(spark, D + "LanduseSmall.mpr")
+    t, m = RF.read_ilwis(spark, _gd("LanduseSmall.mpr"))
     assert checksum(t, m).collect()[0]["checksum"] == 2351
     assert m.gt == (795480.0, 20.0, 0.0, 8090520.0, 0.0, -20.0)
 
 
 def test_zmap_roundtrip(spark, tmp_path):               # zmap_1
-    D = "/root/reference/autotest/gdrivers/data/"
-    tiles, meta = RF.read_geotiff(spark, D + "byte.tif"), \
-        RF.geotiff_meta(D + "byte.tif")
+    tiles, meta = RF.read_geotiff(spark, _gd("byte.tif")), \
+        RF.geotiff_meta(_gd("byte.tif"))
     out = str(tmp_path / "z.zmap")
     RF.write_zmap(tiles, meta, out)
     t2, m2 = RF.read_zmap(spark, out)
@@ -726,9 +729,8 @@ def test_zmap_roundtrip(spark, tmp_path):               # zmap_1
 
 
 def test_kro_roundtrip(spark, tmp_path):                # kro_1/2
-    D = "/root/reference/autotest/gdrivers/data/"
-    tiles = RF.read_geotiff(spark, D + "rgbsmall.tif")
-    meta = RF.geotiff_meta(D + "rgbsmall.tif")
+    tiles = RF.read_geotiff(spark, _gd("rgbsmall.tif"))
+    meta = RF.geotiff_meta(_gd("rgbsmall.tif"))
     out = str(tmp_path / "k.kro")
     RF.write_kro(tiles, meta, out, nbands=3)
     t2, m2 = RF.read_kro(spark, out)
@@ -739,21 +741,20 @@ def test_kro_roundtrip(spark, tmp_path):                # kro_1/2
 def test_gxf_and_pnm_goldens(spark):
     """GXF plain + base-90 compressed (gxf_1/2) and netpbm P5/P6
     (pnm_1/3) read goldens."""
-    D = "/root/reference/autotest/gdrivers/data/"
-    t, m = RF.read_gxf(spark, D + "small.gxf")
+    t, m = RF.read_gxf(spark, _gd("small.gxf"))
     assert checksum(t, m).collect()[0]["checksum"] == 90
-    t, m = RF.read_gxf(spark, D + "small2.gxf")
+    t, m = RF.read_gxf(spark, _gd("small2.gxf"))
     assert checksum(t, m).collect()[0]["checksum"] == 65042
-    t, m = RF.read_pnm(spark, D + "byte.pgm")
+    t, m = RF.read_pnm(spark, _gd("byte.pgm"))
     assert checksum(t, m).collect()[0]["checksum"] == 4672
-    t, m = RF.read_pnm(spark, D + "rgbsmall.ppm")
+    t, m = RF.read_pnm(spark, _gd("rgbsmall.ppm"))
     cs = {r["band"]: r["checksum"] for r in checksum(t, m).collect()}
     assert cs[1] == 21053      # band 2 (green) golden
 
 
 def test_sgi_golden(spark):                              # sgi_1
     t, m = RF.read_sgi(
-        spark, "/root/reference/autotest/gdrivers/data/byte.sgi")
+        spark, _gd("byte.sgi"))
     assert checksum(t, m).collect()[0]["checksum"] == 4672
 
 
@@ -766,14 +767,14 @@ def test_sgi_golden(spark):                              # sgi_1
 ])
 def test_bsb_goldens(spark, fn, cs):
     t, m, pal = RF.read_bsb(
-        spark, "/root/reference/autotest/gdrivers/data/" + fn)
+        spark, _gd(fn))
     assert checksum(t, m).collect()[0]["checksum"] == cs
     assert len(pal) == 127
 
 
 def test_ida_golden(spark):                              # ida_2
     t, m = RF.read_ida(
-        spark, "/root/reference/autotest/gdrivers/data/DWI01012.AFC")
+        spark, _gd("DWI01012.AFC"))
     assert checksum(t, m).collect()[0]["checksum"] == 4026
 
 
@@ -787,24 +788,22 @@ def test_ida_golden(spark):                              # ida_2
 ])
 def test_rmf_goldens(spark, fn, want):
     t, m = RF.read_rmf(
-        spark, "/root/reference/autotest/gdrivers/data/" + fn)
+        spark, _gd(fn))
     cs = {r["band"]: r["checksum"] for r in checksum(t, m).collect()}
     assert [cs[i] for i in range(len(want))] == want
 
 
 def test_northwood_goldens(spark):                      # nwt_grd_1 / grc_1
-    D = "/root/reference/autotest/gdrivers/data/"
-    t, m = RF.read_nwt_grd(spark, D + "nwt_grd.grd")
+    t, m = RF.read_nwt_grd(spark, _gd("nwt_grd.grd"))
     cs = {r["band"]: r["checksum"] for r in checksum(t, m).collect()}
     assert [cs[i] for i in range(3)] == [28093, 33626, 20260]
-    t, m = RF.read_nwt_grc(spark, D + "nwt_grc.grc")
+    t, m = RF.read_nwt_grc(spark, _gd("nwt_grc.grc"))
     assert checksum(t, m).collect()[0]["checksum"] == 46760
 
 
 def test_hf2_roundtrip(spark, tmp_path):                # hf2_1 / hf2_2
-    D = "/root/reference/autotest/gdrivers/data/"
-    tiles = RF.read_geotiff(spark, D + "byte.tif")
-    meta = RF.geotiff_meta(D + "byte.tif")
+    tiles = RF.read_geotiff(spark, _gd("byte.tif"))
+    meta = RF.geotiff_meta(_gd("byte.tif"))
     out = str(tmp_path / "t.hf2")
     RF.write_hf2(tiles, meta, out)
     t2, m2 = RF.read_hf2(spark, out)
@@ -832,7 +831,7 @@ def test_hf2_roundtrip(spark, tmp_path):                # hf2_1 / hf2_2
 ])
 def test_pds_goldens(spark, fn, cs, gt, nodata):
     tiles, meta, scale, offset = RF.read_pds(
-        spark, "/root/reference/autotest/gdrivers/data/" + fn)
+        spark, _gd(fn))
     assert checksum(tiles, meta).collect()[0]["checksum"] == cs
     if gt:
         # the autotest's own gt epsilon: (|gt1|+|gt2|)/100
@@ -846,13 +845,8 @@ def test_pds_goldens(spark, fn, cs, gt, nodata):
 def test_geotiff_geokey_srs():
     # GeoKey directory -> EPSG -> registry CRS (gt_wkt_srs.cpp
     # GTIFGetOGISDefn); byte.tif is NAD27 / UTM 11N (EPSG:26711)
-    import os
-
-    import pytest
     from gdal_spark.raster.formats import geotiff_srs
-    path = "/root/reference/autotest/gcore/data/byte.tif"
-    if not os.path.exists(path):
-        pytest.skip("reference autotest data not present")
+    path = _gcore("byte.tif")
     s = geotiff_srs(open(path, "rb").read())
     assert s["model_type"] == "projected"
     assert s["epsg"] == 26711
@@ -869,5 +863,5 @@ def test_geotiff_geokey_srs():
     assert abs(x2 - x) < 1e-4 and abs(y2 - y) < 1e-4
 
     s2 = geotiff_srs(open(
-        "/root/reference/autotest/gcore/data/rgbsmall.tif", "rb").read())
+        _gcore("rgbsmall.tif"), "rb").read())
     assert s2["model_type"] == "geographic" and s2["epsg"] == 4326

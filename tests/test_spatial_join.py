@@ -130,3 +130,84 @@ def test_metadata_probe_runs_no_job(spark, tmp_path):
     after = set(tracker.getJobIdsForGroup(None) or [])
     assert est is not None and est >= 1
     assert after == before, "metadata probe launched a Spark job"
+
+
+def _job_count(spark) -> int:
+    """Jobs in the core status store, after the listener bus drains."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore().jobsList(None).size()
+
+
+@pytest.mark.parametrize("grid", ["admin", "diamond"])
+def test_broadcast_build_runs_no_job(spark, grid):
+    """Driver-built layers are LocalRelations: building the grid and the
+    broadcast join (the polygon collect included) starts no Spark job."""
+    pts = spark.createDataFrame([(5.0, 5.0), (-50.0, 40.0), (170.0, -80.0)],
+                                "lon double, lat double")
+    before = _job_count(spark)
+    if grid == "admin":
+        polys = PG.admin_grid(spark, nx=36, ny=17)
+    else:
+        polys = PG.diamond_grid(spark, 40, 40, -100.0, 100.0, -100.0, 100.0,
+                                concave=True)
+    out = SJ.point_in_polygon_join(pts, polys, strategy="broadcast")
+    assert _job_count(spark) == before
+    assert out.count() >= 1
+    assert _job_count(spark) > before
+
+
+def test_rect_cell_table_is_local_relation(spark):
+    pts = spark.createDataFrame([(5.0, 5.0)], "lon double, lat double")
+    out = SJ.point_in_polygon_join(pts, PG.admin_grid(spark), strategy="broadcast")
+    leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
+    names = {leaves.apply(i).getClass().getSimpleName()
+             for i in range(leaves.size())}
+    assert names == {"LogicalRDD", "LocalRelation"}
+    assert [r["cell_id"] for r in out.collect()] == [42]
+
+
+def test_auto_strategy_reads_exact_row_count(spark):
+    polys = PG.diamond_grid(spark, 40, 40, -100.0, 100.0, -100.0, 100.0)
+    assert SJ._estimated_row_count(polys) == 1600
+
+
+def test_broadcast_pip_empty_partition(spark):
+    """A points frame with an empty partition through the Arrow broadcast
+    kernel (non-rectangular polygons)."""
+    polys = PG.diamond_grid(spark, 4, 4, -10.0, 10.0, -10.0, 10.0, concave=True)
+    pts = spark.createDataFrame([("a", 0.0, 1.0), ("b", 50.0, 0.0)],
+                                "url string, lon double, lat double"
+                                ).repartition(3, "url")
+    assert 0 in pts.rdd.glom().map(len).collect()
+    got = sorted((r["url"], r["cell_id"]) for r in SJ.point_in_polygon_join(
+        pts, polys, how="left", strategy="broadcast").collect())
+    assert got == [("a", 10), ("b", None)]
+
+
+def test_shuffle_keeps_polygons_touching_the_pole(spark):
+    """A rectangle reaching lat -90: its cell keys are clamped to the
+    Web-Mercator domain, so the shuffle path finds the same match as the
+    broadcast path."""
+    rect = np.array([[-10, -90], [10, -90], [10, -60], [-10, -60], [-10, -90]],
+                    dtype=float)
+    polys = spark.createDataFrame([(1, bytearray(G.encode_polygon([rect])))],
+                                  "cell_id long, wkb binary")
+    pts = spark.createDataFrame([("a", 0.0, -70.0), ("b", 0.0, -89.9)],
+                                "url string, lon double, lat double")
+    got = {s: sorted((r["url"], r["cell_id"]) for r in SJ.point_in_polygon_join(
+        pts, polys, how="left_first", strategy=s).collect())
+        for s in ("broadcast", "shuffle")}
+    assert got["shuffle"] == got["broadcast"] == [("a", 1), ("b", 1)]
+
+
+def test_shuffle_left_batch_without_candidates(spark):
+    """A batch holding only points with no candidate polygon."""
+    sq = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=float)
+    polys = spark.createDataFrame([(1, bytearray(G.encode_polygon([sq])))],
+                                  "cell_id long, wkb binary")
+    pts = spark.createDataFrame([("b", 50.0, 5.0)],
+                                "url string, lon double, lat double")
+    out = SJ.point_in_polygon_join(pts, polys, how="left_first",
+                                   strategy="shuffle", cell_zoom=3)
+    assert [(r["url"], r["cell_id"]) for r in out.collect()] == [("b", None)]

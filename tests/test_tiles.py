@@ -122,3 +122,17 @@ def test_geodetic_columns_match_twins(spark):
     got = T.with_geodetic_tile_columns(df, zoom=7).collect()
     for r in got:
         assert (r["gtx"], r["gty"]) == T.py_geodetic_tile(r["lon"], r["lat"], 7)
+
+
+@pytest.mark.parametrize("zoom", [0, 1, 3, 8, 10, 12, 18, 23])
+def test_quadkey_matches_python_over_grid(spark, zoom):
+    """The Morton-interleave quadkey against the digit-by-digit Python
+    twin, including the out-of-range coordinates -1 and 2^zoom (only the
+    low zoom bits count)."""
+    n = 2 ** zoom
+    vals = sorted({-1, 0, 1, n // 3, n - 2, n - 1, n})
+    df = spark.createDataFrame([(tx, ty) for tx in vals for ty in vals],
+                               "tx int, ty int")
+    for r in df.select("tx", "ty", T.quadkey(F.col("tx"), F.col("ty"), zoom)
+                       .alias("q")).collect():
+        assert r["q"] == T.py_quadkey(r["tx"], r["ty"], zoom), (r, zoom)

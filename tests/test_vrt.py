@@ -5,6 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from conftest import reference_fixture
 from gdal_spark.raster import formats as RF
 from gdal_spark.raster import model as M
 from gdal_spark.raster import vrt as V
@@ -98,7 +99,7 @@ def test_vrt_lazy(spark, tmp_path):
 # --- LUT + KernelFilteredSource goldens (autotest/gdrivers/vrtlut.py,
 # vrtfilt.py) over the reference's own fixtures -------------------------------
 
-GD = "/root/reference/autotest/gdrivers/data/"
+GD = "gdrivers/data/"
 
 
 def _stage(tmp_path, *names):
@@ -107,7 +108,7 @@ def _stage(tmp_path, *names):
     d = tmp_path / "data"
     d.mkdir(exist_ok=True)
     for n in names:
-        shutil.copy(GD + n, str(d / n))
+        shutil.copy(reference_fixture(GD + n), str(d / n))
     return d
 
 
@@ -138,7 +139,7 @@ def test_vrt_kernel_filter_nodata(spark, tmp_path):          # vrtfilt_2
 
 
 def _mask_vrt(source_band):                                  # vrtmask_1/2
-    src = GD + "byte.tif"
+    src = reference_fixture(GD + "byte.tif")
     per_band = source_band.startswith("mask")
     mask_band_xml = f"""<MaskBand><VRTRasterBand dataType="Byte">
       <SimpleSource><SourceFilename relativeToVRT="0">{src}</SourceFilename>
@@ -178,7 +179,7 @@ def test_vrt_per_band_mask_of_source_mask(spark):            # vrtmask_2
 
 def test_vrt_overview_element(spark):                        # vrtovr_1
     from gdal_spark.raster.checksum import checksum
-    src = GD + "byte.tif"
+    src = reference_fixture(GD + "byte.tif")
     xml = f"""<VRTDataset rasterXSize="20" rasterYSize="20">
   <VRTRasterBand dataType="Byte" band="1">
     <SimpleSource><SourceFilename relativeToVRT="0">{src}</SourceFilename>

@@ -9,13 +9,16 @@ invalid.vrt error case."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from conftest import REFERENCE_AUTOTEST, reference_fixture
 from gdal_spark.apps import read_vector
 from gdal_spark.functions import geometry as G
 from gdal_spark.sources.vrt_vector import read_vrt_vector, vrt_layer_names
 
-D = "/root/reference/autotest/ogr/data/"
+D = "ogr/data/"
 V = D + "vrt_test.vrt"
 
 
@@ -24,19 +27,19 @@ def _wkts(rows):
 
 
 def test_vrt_layer_names():                                 # ogr_vrt_1
-    assert vrt_layer_names(V) == ["test2", "test3", "test4", "test5",
-                                  "test6", "test7"]
+    assert vrt_layer_names(reference_fixture(V)) == [
+        "test2", "test3", "test4", "test5", "test6", "test7"]
 
 
 def test_vrt_point_from_columns(spark):                     # ogr_vrt_2
-    rows = read_vrt_vector(spark, V, "test2").orderBy("fid").collect()
+    rows = read_vrt_vector(spark, reference_fixture(V), "test2").orderBy("fid").collect()
     assert [r["fid"] for r in rows] == [0, 1]       # FID copied from source
     assert [r["other"] for r in rows] == ["First", "Second"]
     assert _wkts(rows) == ["POINT (12.5 17 1.2)", "POINT (100 200 0)"]
 
 
 def test_vrt_wkt_field_and_fid_column(spark):               # ogr_vrt_3/6
-    rows = read_vrt_vector(spark, V, "test3").orderBy("fid").collect()
+    rows = read_vrt_vector(spark, reference_fixture(V), "test3").orderBy("fid").collect()
     assert [r["fid"] for r in rows] == [1, 2]       # FID from the fid field
     assert _wkts(rows) == ["POINT (12.5 17 1.2)", "POINT (100 200 0)"]
     # GetFeature(2) → 'Second'
@@ -44,24 +47,25 @@ def test_vrt_wkt_field_and_fid_column(spark):               # ogr_vrt_3/6
 
 
 def test_vrt_src_sql(spark):                                # ogr_vrt_7
-    rows = read_vrt_vector(spark, V, "test4").orderBy("fid").collect()
+    rows = read_vrt_vector(spark, reference_fixture(V), "test4").orderBy("fid").collect()
     assert [r["fid"] for r in rows] == [1, 2]
     assert [r["other"] for r in rows] == ["First", "Second"]
     assert _wkts(rows) == ["POINT (12.5 17 1.2)", "POINT (100 200 0)"]
 
 
 def test_vrt_declared_fields_and_fid_rename(spark):         # vrt_test 6/7
-    t6 = read_vrt_vector(spark, V, "test6")
+    t6 = read_vrt_vector(spark, reference_fixture(V), "test6")
     assert t6.columns == ["fid", "x", "geometry"]
     assert sorted((r["fid"], r["x"]) for r in t6.collect()) == \
         [(1, 12.5), (2, 100.0)]
-    t7 = read_vrt_vector(spark, V, "test7")
+    t7 = read_vrt_vector(spark, reference_fixture(V), "test7")
     assert t7.columns == ["bar", "x", "geometry"]
 
 
 def test_vrt_inline_xml(spark):                             # ogr_vrt_8
     xml = ('<OGRVRTDataSource><OGRVRTLayer name="test4">'
-           f'<SrcDataSource relativeToVRT="0">{D}flat.dbf</SrcDataSource>'
+           f'<SrcDataSource relativeToVRT="0">{reference_fixture(D + "flat.dbf")}'
+           '</SrcDataSource>'
            '<SrcSQL>SELECT * FROM flat</SrcSQL><FID>fid</FID>'
            '<GeometryType>wkbPoint</GeometryType>'
            '<GeometryField encoding="PointFromColumns" x="x" y="y" z="z"/>'
@@ -105,7 +109,7 @@ def test_vrt_src_region(spark, tmp_path):                   # ogr_vrt_15
 
 
 def test_vrt_direct_shapefile_passthrough(spark):           # departs.vrt
-    df = read_vrt_vector(spark, D + "departs.vrt")
+    df = read_vrt_vector(spark, reference_fixture(D + "departs.vrt"))
     n = df.count()
     assert n > 0
     r = df.filter("geometry is not null").first()
@@ -114,4 +118,5 @@ def test_vrt_direct_shapefile_passthrough(spark):           # departs.vrt
 
 def test_vrt_invalid(spark):                                # ogr_vrt_28
     with pytest.raises((ValueError, Exception)):
-        read_vrt_vector(spark, D + "invalid.vrt", "foo")
+        read_vrt_vector(spark, os.path.join(REFERENCE_AUTOTEST, D, "invalid.vrt"),
+                        "foo")
