@@ -8,7 +8,9 @@ a narrow map stage with no Python in the loop.
 
 Two twins are provided:
 - ``py_*``   — plain-Python reference implementations (tests, goldens).
-- column functions taking/returning ``pyspark.sql.Column``.
+- column functions returning ``pyspark.sql.Column``; the tile keys
+  ``tile_x``/``tile_y`` take a column name and are one SQL expression
+  each (``tile_x_sql``/``tile_y_sql`` give the text).
 """
 
 from __future__ import annotations
@@ -122,18 +124,6 @@ def resolution(zoom: int) -> float:
     return py_resolution(zoom)
 
 
-def mercator_x(lon: Column) -> Column:
-    """lon → mercator mx (gdal2tiles.py LatLonToMeters)."""
-    return lon * F.lit(ORIGIN_SHIFT / 180.0)
-
-
-def mercator_y(lat: Column) -> Column:
-    """lat → mercator my. Expression order mirrors the reference:
-    log(tan((90+lat)*pi/360)) / (pi/180) * (originShift/180)."""
-    my = F.log(F.tan((F.lit(90.0) + lat) * F.lit(math.pi / 360.0))) / F.lit(math.pi / 180.0)
-    return my * F.lit(ORIGIN_SHIFT / 180.0)
-
-
 def meters_to_lon(mx: Column) -> Column:
     return mx / F.lit(ORIGIN_SHIFT) * F.lit(180.0)
 
@@ -145,27 +135,55 @@ def meters_to_lat(my: Column) -> Column:
     )
 
 
-def meters_to_pixels_x(mx: Column, zoom: int) -> Column:
-    return (mx + F.lit(ORIGIN_SHIFT)) / F.lit(py_resolution(zoom))
-
-
-def meters_to_pixels_y(my: Column, zoom: int) -> Column:
-    return (my + F.lit(ORIGIN_SHIFT)) / F.lit(py_resolution(zoom))
-
-
 def pixels_to_tile(p: Column) -> Column:
     """ceil(p/256) - 1, as int (gdal2tiles.py:246-249)."""
     return (F.ceil(p / F.lit(float(TILE_SIZE))) - F.lit(1)).cast("int")
 
 
-def tile_x(lon: Column, zoom: int) -> Column:
-    """lon → TMS tile x at zoom."""
-    return pixels_to_tile(meters_to_pixels_x(mercator_x(lon), zoom))
+def quote(name: str) -> str:
+    """A column name as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def tile_y(lat: Column, zoom: int) -> Column:
-    """lat → TMS tile y at zoom."""
-    return pixels_to_tile(meters_to_pixels_y(mercator_y(lat), zoom))
+def _d(v: float) -> str:
+    """A double literal in Spark SQL text (``repr`` round-trips exactly)."""
+    return f"{v!r}D"
+
+
+def _meters_to_tile_sql(m: str, zoom: int) -> str:
+    """ceil((m + originShift) / res / 256) - 1, as int (gdal2tiles.py
+    MetersToPixels + PixelsToTile:246-249)."""
+    return (f"CAST(CEIL(((({m}) + {_d(ORIGIN_SHIFT)}) / {_d(py_resolution(zoom))})"
+            f" / {_d(float(TILE_SIZE))}) - 1 AS INT)")
+
+
+def tile_x_sql(lon: str, zoom: int) -> str:
+    """SQL text of the TMS tile x at ``zoom`` of the SQL expression ``lon``:
+    mx = lon * (originShift/180) (gdal2tiles.py LatLonToMeters).
+
+    Tile keys are SQL text so that one key costs one Column call (a key
+    composed of Column operators took ~120 driver round trips); the
+    operations and their order are those of the composed form."""
+    return _meters_to_tile_sql(f"({lon}) * {_d(ORIGIN_SHIFT / 180.0)}", zoom)
+
+
+def tile_y_sql(lat: str, zoom: int) -> str:
+    """SQL text of the TMS tile y at ``zoom`` of the SQL expression ``lat``:
+    my = log(tan((90+lat)*pi/360)) / (pi/180) * (originShift/180), in the
+    reference's order."""
+    my = (f"(ln(tan(({_d(90.0)} + ({lat})) * {_d(math.pi / 360.0)}))"
+          f" / {_d(math.pi / 180.0)}) * {_d(ORIGIN_SHIFT / 180.0)}")
+    return _meters_to_tile_sql(my, zoom)
+
+
+def tile_x(lon: str, zoom: int) -> Column:
+    """Column ``lon`` (by name) → TMS tile x at zoom."""
+    return F.expr(tile_x_sql(quote(lon), zoom))
+
+
+def tile_y(lat: str, zoom: int) -> Column:
+    """Column ``lat`` (by name) → TMS tile y at zoom."""
+    return F.expr(tile_y_sql(quote(lat), zoom))
 
 
 def google_y(ty: Column, zoom: int) -> Column:
@@ -267,8 +285,8 @@ def with_tile_columns(df, lon: str = "lon", lat: str = "lat", zoom: int = 12,
     """
     tx, ty = F.col(prefix + "tx"), F.col(prefix + "ty")
     return (
-        df.withColumns({prefix + "tx": tile_x(F.col(lon), zoom),
-                        prefix + "ty": tile_y(F.col(lat), zoom)})
+        df.withColumns({prefix + "tx": tile_x(lon, zoom),
+                        prefix + "ty": tile_y(lat, zoom)})
         .withColumns({prefix + "gy": google_y(ty, zoom),
                       prefix + "quadkey": quadkey(tx, ty, zoom)})
     )

@@ -60,14 +60,14 @@ def knn_cell_ring(queries: DataFrame, points: DataFrame, k: int,
     zmax_t = (1 << zoom) - 1
 
     pts = (points.select(F.col(p_id), F.col("lon").alias("_plon"), F.col("lat").alias("_plat"))
-           .withColumn("_tx", tiles.tile_x(F.col("_plon"), zoom))
-           .withColumn("_ty", tiles.tile_y(F.col("_plat"), zoom))
+           .withColumn("_tx", tiles.tile_x("_plon", zoom))
+           .withColumn("_ty", tiles.tile_y("_plat", zoom))
            .repartition(F.col("_tx"), F.col("_ty"))
            .persist())
 
     q0 = (queries.select(F.col(q_id), F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat"))
-          .withColumn("_qtx", tiles.tile_x(F.col("_qlon"), zoom))
-          .withColumn("_qty", tiles.tile_y(F.col("_qlat"), zoom))
+          .withColumn("_qtx", tiles.tile_x("_qlon", zoom))
+          .withColumn("_qty", tiles.tile_y("_qlat", zoom))
           .persist())
 
     unsettled = q0

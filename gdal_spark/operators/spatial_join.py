@@ -19,10 +19,11 @@ nested loop; here the same semantics distribute two ways:
   skewed point distributions cost nothing.
 
 - **shuffle path** (large polygon side): both sides get WebMercator cell
-  keys at ``cell_zoom`` (points: 1 cell; polygons: exploded over bbox-covered
-  cells — pure column `sequence`/`explode`, no UDF), equi-join on
-  (tx, ty) — Catalyst shuffle-hash/sort-merge with AQE skew splitting —
-  then the exact ray-cast test filters candidate pairs per Arrow batch.
+  keys at ``cell_zoom`` (points: 1 cell; polygons: one row per
+  envelope-covered cell — pure column `sequence`/`inline`, no UDF),
+  equi-join on (tx, ty) — Catalyst broadcast-hash/sort-merge with AQE skew
+  splitting — then one ``mapInArrow`` pass ray-casts all candidate pairs of
+  each Arrow batch in the same pair kernel as the broadcast path.
   Each point owns exactly one cell so no pair dedup is needed.
 
 Join modes: "inner" (all matching pairs — layer-algebra Intersection
@@ -33,10 +34,7 @@ ogr_gensql.cpp:1283-1314 — lowest polygon id wins, made deterministic).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,14 +47,11 @@ def _extend_schema(schema: T.StructType, *fields: tuple[str, T.DataType]) -> T.S
                         + [T.StructField(n, t, True) for n, t in fields])
 
 from gdal_spark.functions import tiles
-from gdal_spark.functions.geometry import PreparedPolygons, decode_polygons
+from gdal_spark.functions.geometry import (PreparedPolygons, decode_polygons,
+                                           decode_rings, envelopes, grid_cover)
 from gdal_spark.session import local_frame
 
 DEFAULT_BROADCAST_MAX_POLYGONS = 100_000
-
-
-def _prepared_from_rows(rows) -> PreparedPolygons:
-    return PreparedPolygons(ids=[r[0] for r in rows], wkbs=[bytes(r[1]) for r in rows])
 
 
 def point_in_polygon_join(
@@ -90,7 +85,7 @@ def point_in_polygon_join(
         rows = polygons.select(poly_id, poly_wkb).collect()
         poly_rows = [(r[0], bytes(r[1])) for r in rows]
         rects = _as_rectangles(poly_rows)
-        if rects is not None:
+        if rects:  # an empty layer takes the kernel path: no cell grid
             # staged-filter fast path (FilterGeometry's envelope-contain
             # accept, ogrlayer.cpp:1344-1450): axis-aligned rectangles need
             # no ray cast — the crossing rule reduces to the half-open box
@@ -127,7 +122,6 @@ def _estimated_row_count(df: DataFrame) -> int | None:
 def _as_rectangles(poly_rows) -> list | None:
     """If every polygon is a single axis-aligned rectangle ring, return
     [(id, xmin, ymin, xmax, ymax)], else None."""
-    from gdal_spark.functions.geometry import decode_polygons
     out = []
     for pid, wkb in poly_rows:
         try:
@@ -157,20 +151,12 @@ def _rect_pip_jvm(points, rects, poly_id, lon, lat, how) -> DataFrame:
     broadcast exploded rectangle set + half-open bbox filter (exact
     ray-cast parity for axis-aligned rings)."""
     spark = points.sparkSession
-    arr = np.array([[x0, y0, x1, y1] for _pid, x0, y0, x1, y1 in rects])
+    arr = np.array([r[1:] for r in rects])
     # plain floats: a numpy scalar literal costs an extra cast column call
-    (gx0, gy0, _, _), (_, _, gx1, gy1) = arr.min(0).tolist(), arr.max(0).tolist()
-    n = len(rects)
-    target = min(max(int(np.sqrt(n / 2.0)) * 2, 1), 512)
-    csx = max((gx1 - gx0) / target, 1e-12)
-    csy = max((gy1 - gy0) / target, 1e-12)
-    cell_rows = []
-    for (pid, x0, y0, x1, y1) in rects:
-        cx0 = int((x0 - gx0) / csx); cx1 = int((x1 - gx0) / csx)
-        cy0 = int((y0 - gy0) / csy); cy1 = int((y1 - gy0) / csy)
-        for cy in range(cy0, cy1 + 1):
-            for cx in range(cx0, cx1 + 1):
-                cell_rows.append((cx, cy, pid, x0, y0, x1, y1))
+    (gx0, gy0, csx, csy), j, cx, cy = grid_cover(arr)
+    cell_rows = list(zip(cx.tolist(), cy.tolist(),
+                         np.array([r[0] for r in rects])[j].tolist(),
+                         *arr[j].T.tolist()))
     cells = local_frame(
         spark, cell_rows, f"_cx int, _cy int, {poly_id} long, "
                           "_rx0 double, _ry0 double, _rx1 double, _ry1 double")
@@ -227,7 +213,8 @@ def _broadcast_pip(points, poly_rows, poly_id, lon, lat, how) -> DataFrame:
     lat_i = pt_schema.fieldNames().index(lat)
 
     def run(batches):
-        prep = _prepared_from_rows(bc.value)  # built once per worker task
+        # built once per worker task
+        prep = PreparedPolygons([r[0] for r in bc.value], [r[1] for r in bc.value])
         for batch in batches:
             px = batch.column(lon_i).to_numpy(zero_copy_only=False)
             py = batch.column(lat_i).to_numpy(zero_copy_only=False)
@@ -260,63 +247,63 @@ def _broadcast_pip(points, poly_rows, poly_id, lon, lat, how) -> DataFrame:
 # shuffle path
 # ---------------------------------------------------------------------------
 
-def _key_lat(lat):
-    """Latitude clamped to the Web-Mercator domain, for cell keys only:
+def _cell_key_sql(lon: str, lat: str, cell_zoom: int) -> tuple[str, str]:
+    """SQL text of the (tx, ty) cell key of columns ``lon``/``lat``. The
+    latitude is clamped to the Web-Mercator domain, for cell keys only:
     tile_y of a latitude beyond ±MAX_LAT is not a finite tile row. The
     exact ray-cast test still sees the raw coordinates."""
-    return F.least(F.greatest(lat, F.lit(-tiles.MAX_LAT)), F.lit(tiles.MAX_LAT))
+    lat = (f"least(greatest({tiles.quote(lat)}, {-tiles.MAX_LAT!r}D), "
+           f"{tiles.MAX_LAT!r}D)")
+    return (tiles.tile_x_sql(tiles.quote(lon), cell_zoom),
+            tiles.tile_y_sql(lat, cell_zoom))
 
 
 def polygon_cover_cells(polygons: DataFrame, poly_wkb: str, cell_zoom: int,
-                        xmin="xmin", ymin="ymin", xmax="xmax", ymax="ymax") -> DataFrame:
-    """Explode each polygon over all (tx, ty) cells its bbox covers —
-    pure column sequence/explode (the gdaltindex-style manifest,
-    gdal/apps/gdaltindex.c:311)."""
-    cols = polygons.columns
-    if not all(c in cols for c in (xmin, ymin, xmax, ymax)):
+                        xmin="xmin", ymin="ymin", xmax="xmax", ymax="ymax",
+                        cols=("*",)) -> DataFrame:
+    """Explode each polygon over all (tx, ty) cells its bbox covers — one
+    column generator, sequence/inline (the gdaltindex-style manifest,
+    gdal/apps/gdaltindex.c:311) — next to ``cols``. Existing
+    ``xmin/ymin/xmax/ymax`` columns are trusted as the envelope; without
+    them it is computed from WKB."""
+    if not all(c in polygons.columns for c in (xmin, ymin, xmax, ymax)):
         polygons = with_envelope(polygons, poly_wkb)
-    tx_lo = tiles.tile_x(F.col(xmin), cell_zoom)
-    tx_hi = tiles.tile_x(F.col(xmax), cell_zoom)
-    ty_lo = tiles.tile_y(_key_lat(F.col(ymin)), cell_zoom)
-    ty_hi = tiles.tile_y(_key_lat(F.col(ymax)), cell_zoom)
-    return (
-        polygons.withColumn("_tx", F.explode(F.sequence(tx_lo, tx_hi)))
-        .withColumn("_ty", F.explode(F.sequence(ty_lo, ty_hi)))
-    )
+        xmin, ymin, xmax, ymax = "xmin", "ymin", "xmax", "ymax"
+    x0, y0 = _cell_key_sql(xmin, ymin, cell_zoom)
+    x1, y1 = _cell_key_sql(xmax, ymax, cell_zoom)
+    return polygons.select(*cols, F.expr(
+        f"inline(flatten(transform(sequence({y0}, {y1}), _cy -> transform("
+        f"sequence({x0}, {x1}), _cx -> named_struct('_tx', _cx, '_ty', _cy)))))"))
 
 
 def with_envelope(polygons: DataFrame, poly_wkb: str = "wkb",
                   prefix: str = "") -> DataFrame:
     """Attach (xmin, ymin, xmax, ymax) envelope columns computed from WKB in
-    one Arrow pass (OGRGeometry::getEnvelope analog)."""
-    schema = _extend_schema(
-        polygons.schema,
-        (prefix + "xmin", T.DoubleType()), (prefix + "ymin", T.DoubleType()),
-        (prefix + "xmax", T.DoubleType()), (prefix + "ymax", T.DoubleType()))
+    one Arrow pass (OGRGeometry::getEnvelope analog); a geometry without
+    vertices gets NaN."""
+    import pyarrow as pa
+
+    names = [prefix + k for k in ("xmin", "ymin", "xmax", "ymax")]
+    schema = _extend_schema(polygons.schema, *((n, T.DoubleType()) for n in names))
     wkb_i = polygons.schema.fieldNames().index(poly_wkb)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mins_x = np.empty(len(pdf)); mins_y = np.empty(len(pdf))
-            maxs_x = np.empty(len(pdf)); maxs_y = np.empty(len(pdf))
-            for i, wkb in enumerate(pdf.iloc[:, wkb_i]):
-                xs, ys = [], []
-                for rings in decode_polygons(bytes(wkb)):
-                    for r in rings:
-                        xs.append(r[:, 0]); ys.append(r[:, 1])
-                ax = np.concatenate(xs); ay = np.concatenate(ys)
-                mins_x[i] = ax.min(); mins_y[i] = ay.min()
-                maxs_x[i] = ax.max(); maxs_y[i] = ay.max()
-            out = pdf.copy()
-            out[prefix + "xmin"] = mins_x; out[prefix + "ymin"] = mins_y
-            out[prefix + "xmax"] = maxs_x; out[prefix + "ymax"] = maxs_y
-            yield out
+    def run(batches):
+        for batch in batches:
+            xy, ring_off, geom_off = decode_rings(batch.column(wkb_i).to_pylist())
+            env = envelopes(xy, xy, ring_off[geom_off])
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(e) for e in env.T],
+                names=batch.schema.names + names)
 
-    return polygons.mapInPandas(run, schema=schema)
+    return polygons.mapInArrow(run, schema=schema)
 
 
 def _shuffle_pip(points, polygons, poly_id, poly_wkb, lon, lat, how, cell_zoom) -> DataFrame:
+    import pyarrow as pa
+
     pt_cols = points.columns
+    tx, ty = _cell_key_sql(lon, lat, cell_zoom)
+    keys = {"_tx": F.expr(tx), "_ty": F.expr(ty)}
     if how != "inner":
         # left modes need a stable per-row identity: keying the dedup window
         # on ALL point columns would (a) shuffle the full payload (text/html
@@ -325,65 +312,65 @@ def _shuffle_pip(points, polygons, poly_id, poly_wkb, lon, lat, how, cell_zoom) 
         # linear subtree — the left cell-join below keeps every point in a
         # single lineage (no independent anti-join re-scan that could
         # recompute different ids; round-2 ADVICE).
-        points = points.withColumn("_rid", F.monotonically_increasing_id())
-    pts = (
-        points.withColumn("_tx", tiles.tile_x(F.col(lon), cell_zoom))
-        .withColumn("_ty", tiles.tile_y(_key_lat(F.col(lat)), cell_zoom))
-    )
-    polys = polygon_cover_cells(
-        polygons.select(poly_id, poly_wkb), poly_wkb, cell_zoom
-    ).select(F.col(poly_id).alias("_pid"), F.col(poly_wkb).alias("_wkb"), "_tx", "_ty")
-
+        keys["_rid"] = F.monotonically_increasing_id()
+    pts = points.withColumns(keys)
+    polys = polygon_cover_cells(polygons, poly_wkb, cell_zoom, cols=(
+        F.col(poly_id).cast("long").alias("_pid"), F.col(poly_wkb).alias("_wkb")))
     # left modes keep unmatched points in-band (null _pid / _wkb rows) so the
     # whole join is one subtree; inner drops them at the cell join already
     paired = pts.join(polys, on=["_tx", "_ty"],
                       how="inner" if how == "inner" else "left")
 
-    # exact ray-cast filter over candidate pairs, grouped by polygon within
-    # each Arrow batch so each unique geometry is prepared once per batch
-    schema = _extend_schema(pts.schema, ("_pid", T.LongType()), ("_inside", T.BooleanType()))
+    # exact ray-cast filter over the candidate pairs of each Arrow batch, in
+    # one kernel call; point columns pass through as Arrow. Left modes keep
+    # per point only the rows the window below can pick: its matches
+    # ("left") or its lowest match ("left_first"), else one null row.
+    out_names = pt_cols + ([] if how == "inner" else ["_rid"])
+    schema = T.StructType([paired.schema[c] for c in out_names]
+                          + [T.StructField("_pid", T.LongType(), True)])
     in_names = paired.columns
-    lon_i = in_names.index(lon); lat_i = in_names.index(lat)
-    pid_i = in_names.index("_pid"); wkb_i = in_names.index("_wkb")
+    out_i = [in_names.index(c) for c in out_names]
+    lon_i, lat_i, pid_i, wkb_i = (in_names.index(c) for c in (lon, lat, "_pid", "_wkb"))
+    rid_i = in_names.index("_rid") if how != "inner" else None
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            px = pdf.iloc[:, lon_i].to_numpy(dtype=np.float64)
-            py = pdf.iloc[:, lat_i].to_numpy(dtype=np.float64)
-            wkbs = pdf.iloc[:, wkb_i]
-            pids = pdf.iloc[:, pid_i].to_numpy(dtype=np.float64, na_value=np.nan)
-            inside = np.zeros(len(pdf), dtype=bool)
-            valid = np.flatnonzero(~np.isnan(pids))  # left-join misses skip the test
-            # group rows by polygon id (same id => same wkb)
-            order = valid[np.argsort(pids[valid], kind="stable")]
-            sorted_pids = pids[order]
-            starts = np.flatnonzero(np.r_[True, sorted_pids[1:] != sorted_pids[:-1]])
-            # a batch of left-join misses only has no polygon groups
-            bounds = np.r_[starts, len(sorted_pids)] if len(order) else []
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                idx = order[s:e]
-                prep = PreparedPolygons(ids=[0], wkbs=[bytes(wkbs.iloc[idx[0]])])
-                hit, _ = prep.contains_batch(px[idx], py[idx])
-                inside[idx[hit]] = True
-            out = pdf.drop(columns=[pdf.columns[wkb_i]])
-            out["_inside"] = inside
-            yield out
+    def run(batches):
+        for batch in batches:
+            pidc = batch.column(pid_i)
+            rows = np.flatnonzero(pidc.is_valid().to_numpy(zero_copy_only=False))
+            pids = pidc.fill_null(0).to_numpy()
+            uniq, first, inv = np.unique(pids[rows], return_index=True,
+                                         return_inverse=True)
+            prep = PreparedPolygons(
+                uniq, batch.column(wkb_i).take(rows[first]).to_pylist())
+            px, py = (np.asarray(batch.column(i).to_numpy(zero_copy_only=False),
+                                 dtype=np.float64)[rows] for i in (lon_i, lat_i))
+            hit = np.zeros(batch.num_rows, dtype=bool)
+            hit[rows] = prep.pairs_inside(px, py, inv.reshape(-1))
+            if rid_i is None:
+                keep = np.flatnonzero(hit)
+            else:
+                # per point: matches first, lowest polygon id first
+                rid = batch.column(rid_i).to_numpy()
+                order = np.lexsort((np.where(hit, pids, np.iinfo(np.int64).max), rid))
+                best = np.diff(rid[order], prepend=-1) != 0  # _rid >= 0
+                keep = order[best if how == "left_first" else best | hit[order]]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(i).take(keep) for i in out_i]
+                + [pa.array(pids[keep], mask=~hit[keep])],
+                names=out_names + ["_pid"])
 
-    tested = paired.mapInPandas(run, schema=schema)
+    tested = paired.mapInArrow(run, schema=schema)
     if how == "inner":
-        return tested.filter(F.col("_inside")).select(
-            *pt_cols, F.col("_pid").alias(poly_id))
+        return tested.withColumnRenamed("_pid", poly_id)
 
-    # left modes: single subtree — rank candidates per point (matches first,
-    # lowest polygon id first); unmatched points are the rids whose best row
-    # is not inside. Saves the anti-join exchange and never recomputes _rid.
+    # left modes: a point's rows may straddle batches, so rank them once
+    # more per point (matches first, lowest polygon id first); unmatched
+    # points keep their one null row.
     from pyspark.sql import Window
-    w = Window.partitionBy("_rid").orderBy(
-        F.col("_inside").desc(), F.col("_pid").asc_nulls_last())
+    w = Window.partitionBy("_rid").orderBy(F.col("_pid").asc_nulls_last())
     ranked = tested.withColumn("_rn", F.row_number().over(w))
     if how == "left_first":
         out = ranked.filter(F.col("_rn") == 1)
     else:  # "left": all matches, plus one null row for unmatched points
-        out = ranked.filter(F.col("_inside") | (F.col("_rn") == 1))
-    pid = F.when(F.col("_inside"), F.col("_pid")).cast("long")
-    return out.select(*pt_cols, pid.alias(poly_id))
+        out = ranked.filter(F.col("_pid").isNotNull() | (F.col("_rn") == 1))
+    return out.select(*pt_cols, F.col("_pid").alias(poly_id))

@@ -346,6 +346,8 @@ def describe(data: bytes, var_name: str | None = None,
         nodata = nodata[0] if nodata else None
     if nodata is not None:
         nodata = float(nodata)
+        if v.nc_type == 1 and nodata < 0:  # NC_BYTE reads as unsigned Byte
+            nodata += 256.0
     scale = v.atts.get("scale_factor")
     offset = v.atts.get("add_offset")
     return NCRaster(var_name, width, height, n_bands,
@@ -597,6 +599,7 @@ def read_gmt(spark, path: str, raster_id: str = "gmt", block: int = 256):
 _NC_OF_DTYPE = {"uint8": 1, "int8": 1, "int16": 3, "int32": 4,
                 "float32": 5, "float64": 6}
 _BE_OF_NC = {1: "i1", 3: ">i2", 4: ">i4", 5: ">f4", 6: ">f8"}
+_NC_OF_BE = {np.dtype(v).str: k for k, v in _BE_OF_NC.items()}
 
 
 def _nc_name(s: str) -> bytes:
@@ -609,6 +612,10 @@ def _nc_att(name: str, value) -> bytes:
     if isinstance(value, str):
         b = value.encode()
         out += struct.pack(">ii", 2, len(b)) + b \
+            + b"\0" * ((4 - len(b) % 4) % 4)
+    elif isinstance(value, np.ndarray):  # typed: nc_type from the dtype
+        b = value.tobytes()
+        out += struct.pack(">ii", _NC_OF_BE[value.dtype.str], value.size) + b \
             + b"\0" * ((4 - len(b) % 4) % 4)
     elif isinstance(value, float):
         out += struct.pack(">ii", 6, 1) + struct.pack(">d", value)
@@ -661,8 +668,9 @@ def write_netcdf(tiles, meta, path: str, var_prefix: str = "Band",
     for b in range(n_bands):
         atts = [("long_name", f"GDAL Band Number {b + 1}")]
         if nodata is not None:
-            atts.append(("_FillValue", float(nodata))
-                        if nc_type in (5, 6) else ("_FillValue", int(nodata)))
+            # CF: _FillValue has the variable's type (a uint8 fill keeps
+            # its bit pattern in the signed NC_BYTE)
+            atts.append(("_FillValue", np.array([nodata]).astype(np_t)))
         if meta.dtype == "uint8":
             atts.append(("_Unsigned", "true"))
         data = np.ascontiguousarray(arrs[b]).astype(np_t).tobytes()

@@ -46,17 +46,37 @@ def admin_grid(spark: SparkSession, nx: int = 12, ny: int = 6,
     cell_id = row-major index; bbox columns allow SQL oracles and Catalyst
     pruning; wkb is the geometry the exact-PIP path consumes.
     """
+    i, j = np.tile(np.arange(nx), ny), np.repeat(np.arange(ny), nx)
     dx = (lon_max - lon_min) / nx
     dy = (lat_max - lat_min) / ny
-    rows = []
-    for j in range(ny):
-        for i in range(nx):
-            x0, x1 = lon_min + i * dx, lon_min + (i + 1) * dx
-            y0, y1 = lat_min + j * dy, lat_min + (j + 1) * dy
-            ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
-            rows.append((j * nx + i, f"cell_{i}_{j}",
-                         G.encode_polygon([ring]), x0, y0, x1, y1))
-    return local_frame(spark, rows, GRID_SCHEMA)
+    x0, x1 = lon_min + i * dx, lon_min + (i + 1) * dx
+    y0, y1 = lat_min + j * dy, lat_min + (j + 1) * dy
+    rings = np.stack([np.stack(c, axis=-1) for c in
+                      ((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))], axis=1)
+    return _grid_frame(spark, "cell", i, j, rings)
+
+
+def _ring_wkbs(rings: np.ndarray) -> list[bytes]:
+    """Single-ring Polygon WKB of each closed ring of ``rings`` (n, k, 2),
+    in one numpy pass: byte-identical to ``G.encode_polygon([ring])``."""
+    n, k, _ = rings.shape
+    rec = np.empty(n, dtype=[("order", "u1"), ("type", "<u4"), ("nrings", "<u4"),
+                             ("npts", "<u4"), ("xy", "<f8", (k, 2))])
+    rec["order"], rec["type"], rec["nrings"], rec["npts"] = 1, G.WKB_POLYGON, 1, k
+    rec["xy"] = rings
+    buf, size = rec.tobytes(), rec.itemsize
+    return [buf[r * size:(r + 1) * size] for r in range(n)]
+
+
+def _grid_frame(spark: SparkSession, prefix: str, i: np.ndarray, j: np.ndarray,
+                rings: np.ndarray) -> DataFrame:
+    """GRID_SCHEMA rows for the cells (i, j) of a grid, with each ring's
+    envelope as the bbox columns; cell_id = row-major index."""
+    lo, hi = rings.min(axis=1), rings.max(axis=1)
+    rows = zip(range(len(rings)), [f"{prefix}_{a}_{b}" for a, b in zip(i, j)],
+               _ring_wkbs(rings), lo[:, 0].tolist(), lo[:, 1].tolist(),
+               hi[:, 0].tolist(), hi[:, 1].tolist())
+    return local_frame(spark, list(rows), GRID_SCHEMA)
 
 
 # AREA / EAS_ID / PRFEDEA ported from /root/reference/autotest/ogr/data/poly.dbf
@@ -118,8 +138,9 @@ def idlink_fixture(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _uv_to_xy(ring_uv: np.ndarray) -> np.ndarray:
-    u, v = ring_uv[:, 0], ring_uv[:, 1]
-    return np.column_stack(((u - v) / 2.0, (u + v) / 2.0))
+    """(..., 2) uv coordinates → xy."""
+    u, v = ring_uv[..., 0], ring_uv[..., 1]
+    return np.stack(((u - v) / 2.0, (u + v) / 2.0), axis=-1)
 
 
 def rot_poly_fixture(spark: SparkSession) -> DataFrame:
@@ -153,23 +174,16 @@ def diamond_grid(spark: SparkSession, nx: int, ny: int,
     45°-rotated diamonds in xy. With ``concave=True`` each cell is an L
     (the cell minus its top-right uv quadrant) — a concave method layer
     that forces the general boolean path everywhere."""
+    i, j = np.tile(np.arange(nx), ny), np.repeat(np.arange(ny), nx)
     du = (u_max - u_min) / nx
     dv = (v_max - v_min) / ny
-    rows = []
-    for j in range(ny):
-        for i in range(nx):
-            u0, u1 = u_min + i * du, u_min + (i + 1) * du
-            v0, v1 = v_min + j * dv, v_min + (j + 1) * dv
-            if concave:
-                um, vm = (u0 + u1) / 2.0, (v0 + v1) / 2.0
-                ring_uv = np.array([[u0, v0], [u1, v0], [u1, vm], [um, vm],
-                                    [um, v1], [u0, v1], [u0, v0]])
-            else:
-                ring_uv = np.array([[u0, v0], [u1, v0], [u1, v1],
-                                    [u0, v1], [u0, v0]])
-            ring = _uv_to_xy(ring_uv)
-            rows.append((j * nx + i, f"dcell_{i}_{j}",
-                         G.encode_polygon([ring]),
-                         float(ring[:, 0].min()), float(ring[:, 1].min()),
-                         float(ring[:, 0].max()), float(ring[:, 1].max())))
-    return local_frame(spark, rows, GRID_SCHEMA)
+    u0, u1 = u_min + i * du, u_min + (i + 1) * du
+    v0, v1 = v_min + j * dv, v_min + (j + 1) * dv
+    if concave:
+        um, vm = (u0 + u1) / 2.0, (v0 + v1) / 2.0
+        corners = ((u0, v0), (u1, v0), (u1, vm), (um, vm), (um, v1), (u0, v1),
+                   (u0, v0))
+    else:
+        corners = ((u0, v0), (u1, v0), (u1, v1), (u0, v1), (u0, v0))
+    ring_uv = np.stack([np.stack(c, axis=-1) for c in corners], axis=1)
+    return _grid_frame(spark, "dcell", i, j, _uv_to_xy(ring_uv))

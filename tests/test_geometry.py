@@ -148,3 +148,98 @@ def test_contains_batch_empty_batch():
         assert pi.dtype == gi.dtype == np.int64
         assert len(pi) == len(gi) == 0
         prep.contains_batch(np.array([5.0]), np.array([5.0]))
+
+
+# ---------------------------------------------------------------------------
+# differential fuzz: the pair kernel against the scalar reference loop
+# ---------------------------------------------------------------------------
+
+def _reference_pairs(polys: list[list[list[np.ndarray]]], px, py) -> set:
+    """(point, polygon) pairs whose even-odd parity over all rings of all
+    parts is odd, by ``py_point_in_ring`` (closed rings only)."""
+    out = set()
+    for j, parts in enumerate(polys):
+        rings = [r for rs in parts for r in rs]
+        for i in range(len(px)):
+            if sum(G.py_point_in_ring(px[i], py[i], r) for r in rings) % 2:
+                out.add((i, j))
+    return out
+
+
+def _fuzz_polygons(rng) -> list[list[list[np.ndarray]]]:
+    """Concave rings, holes, multipolygons and rings of fewer than 4 points
+    on an integer lattice, so lattice points fall on edges and vertices."""
+    polys = []
+    for _ in range(12):
+        x0, y0 = rng.integers(-6, 6, 2).astype(float)
+        w, h = rng.integers(2, 6, 2).astype(float)
+        outer = np.array([[x0, y0], [x0 + w, y0], [x0 + w, y0 + h],
+                          [x0 + w / 2, y0 + h / 2], [x0, y0 + h], [x0, y0]])
+        parts = [[outer]]
+        kind = rng.integers(0, 4)
+        if kind == 1:  # hole
+            parts[0].append(np.array([[x0 + 0.5, y0 + 0.5], [x0 + 1.5, y0 + 0.5],
+                                      [x0 + 1.5, y0 + 1], [x0 + 0.5, y0 + 0.5]]))
+        elif kind == 2:  # second part
+            parts.append([outer + rng.integers(-3, 4, 2)])
+        elif kind == 3:  # a ring of 3 points bounds nothing
+            parts[0].append(np.array([[x0, y0], [x0 + w, y0 + h], [x0, y0]]))
+        polys.append(parts)
+    return polys
+
+
+def _wkb(parts) -> bytes:
+    return G.encode_polygon(parts[0]) if len(parts) == 1 else \
+        G.encode_multipolygon(parts)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_contains_batch_matches_scalar_reference(seed):
+    rng = np.random.default_rng(seed)
+    polys = _fuzz_polygons(rng)
+    lattice = rng.integers(-8, 14, (300, 2)) / 2.0  # on vertices and edges
+    px = np.r_[lattice[:, 0], rng.uniform(-8, 14, 300)]
+    py = np.r_[lattice[:, 1], rng.uniform(-8, 14, 300)]
+    prep = G.PreparedPolygons(list(range(len(polys))), [_wkb(p) for p in polys])
+    pi, gi = prep.contains_batch(px, py)
+    assert len(set(zip(pi.tolist(), gi.tolist()))) == len(pi)
+    assert set(zip(pi.tolist(), gi.tolist())) == _reference_pairs(polys, px, py)
+
+
+def test_pairs_inside_over_several_chunks_matches_one_chunk():
+    rng = np.random.default_rng(5)
+    t = np.linspace(0, 2 * np.pi, 400)
+    star = np.column_stack(((3 + np.cos(7 * t)) * np.cos(t),
+                            (3 + np.cos(7 * t)) * np.sin(t)))
+    star[-1] = star[0]
+    polys = [[[star]], [[SQUARE - 5.0, HOLE - 5.0]], [[CONCAVE - 4.0]]]
+    prep = G.PreparedPolygons([0, 1, 2], [_wkb(p) for p in polys])
+    px, py = rng.uniform(-5, 6, 2000), rng.uniform(-5, 6, 2000)
+    poly = rng.integers(0, 3, 2000)
+    whole = prep.pairs_inside(px, py, poly)
+    prep.CHUNK_EDGES = 64  # the star alone (399 edges) exceeds a chunk
+    assert np.array_equal(prep.pairs_inside(px, py, poly), whole)
+    ref = _reference_pairs(polys, px, py)
+    assert {i for i in range(2000) if (i, int(poly[i])) in ref} == \
+        set(np.flatnonzero(whole).tolist())
+    assert whole.any() and not whole.all()
+
+
+def test_contains_batch_skips_polygons_without_a_bbox():
+    """A polygon whose rings all have fewer than 4 points, or with a NaN
+    vertex, has a NaN bbox: it matches nothing and the rest still match."""
+    degenerate = np.array([[0.0, 0.0], [5.0, 5.0], [0.0, 0.0]])
+    nan_ring = SQUARE.copy()
+    nan_ring[2] = np.nan
+    prep = G.PreparedPolygons([1, 2, 3], [G.encode_polygon([degenerate]),
+                                          G.encode_polygon([nan_ring]),
+                                          G.encode_polygon([SQUARE])])
+    assert np.isnan(prep.bbox[:2]).all()
+    pi, gi = prep.contains_batch(np.array([1.0, 2.5, 50.0]), np.array([1.0, 2.5, 5.0]))
+    assert sorted(zip(pi.tolist(), prep.ids[gi].tolist())) == [(0, 3), (1, 3)]
+    only_bad = G.PreparedPolygons([1], [G.encode_polygon([degenerate])])
+    for batch in (np.array([1.0]), np.empty(0)):
+        pi, gi = only_bad.contains_batch(batch, batch)
+        assert len(pi) == len(gi) == 0
+    empty = G.PreparedPolygons([], [])
+    assert len(empty.pairs_inside(np.empty(0), np.empty(0), np.empty(0, dtype=np.int64))) == 0

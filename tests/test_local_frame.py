@@ -4,9 +4,11 @@ rows."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import types as T
 
+from gdal_spark.functions import geometry as G
 from gdal_spark.session import local_frame
 from gdal_spark.sources import polygons as PG
 
@@ -67,3 +69,42 @@ def test_grid_builders_are_local_relations(spark, build):
     df = build(spark)
     assert _leaf(df) == "LocalRelation"
     assert not any(f.nullable for f in df.schema)
+
+
+def _cell_rings(nx, ny, a_min, a_max, b_min, b_max, concave):
+    """The per-cell loop the grid builders vectorise: (i, j, closed ring)."""
+    da, db = (a_max - a_min) / nx, (b_max - b_min) / ny
+    for j in range(ny):
+        for i in range(nx):
+            a0, a1 = a_min + i * da, a_min + (i + 1) * da
+            b0, b1 = b_min + j * db, b_min + (j + 1) * db
+            am, bm = (a0 + a1) / 2.0, (b0 + b1) / 2.0
+            ring = ([[a0, b0], [a1, b0], [a1, bm], [am, bm], [am, b1], [a0, b1]]
+                    if concave else [[a0, b0], [a1, b0], [a1, b1], [a0, b1]])
+            yield i, j, np.array(ring + [[a0, b0]])
+
+
+@pytest.mark.parametrize("kind,args", [
+    ("admin", (36, 17, -180.0, 180.0, -85.0, 85.0, False)),
+    ("admin", (7, 3, -2.0, 96.3, 1.0, 9.7, False)),
+    ("diamond", (40, 40, -121.0, 49.0, -49.0, 121.0, True)),
+    ("diamond", (8, 2, -2.0, 98.0, -3.0, 7.0, False)),
+])
+def test_grid_wkb_is_encode_polygon(spark, kind, args):
+    """The vectorised builders emit, byte for byte, what ``encode_polygon``
+    makes of each cell's ring, with the ring's envelope as bbox."""
+    nx, ny, a0, a1, b0, b1, concave = args
+    if kind == "admin":
+        df = PG.admin_grid(spark, nx, ny, a0, a1, b0, b1)
+    else:
+        df = PG.diamond_grid(spark, nx, ny, a0, a1, b0, b1, concave=concave)
+    got = {r["cell_id"]: r for r in df.collect()}
+    assert len(got) == nx * ny
+    for i, j, ring in _cell_rings(*args):
+        if kind == "diamond":
+            ring = PG._uv_to_xy(ring)
+        r = got[j * nx + i]
+        assert bytes(r["wkb"]) == G.encode_polygon([ring])
+        assert r["cell_name"] == f"{'cell' if kind == 'admin' else 'dcell'}_{i}_{j}"
+        assert (r["xmin"], r["ymin"], r["xmax"], r["ymax"]) == (
+            *ring.min(axis=0).tolist(), *ring.max(axis=0).tolist())

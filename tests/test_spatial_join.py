@@ -211,3 +211,73 @@ def test_shuffle_left_batch_without_candidates(spark):
     out = SJ.point_in_polygon_join(pts, polys, how="left_first",
                                    strategy="shuffle", cell_zoom=3)
     assert [(r["url"], r["cell_id"]) for r in out.collect()] == [("b", None)]
+
+
+def _diamond_points(spark):
+    """Points on a quarter-degree lattice (many on diamond edges and
+    vertices), uniform points, and a tail of far points that fall in no
+    cell; one partition, so the tail fills whole Arrow batches."""
+    rng = np.random.default_rng(11)
+    lon = np.r_[rng.integers(-80, 80, 300) / 4.0, rng.uniform(-25, 25, 300),
+                np.full(30, 170.0)]
+    lat = np.r_[rng.integers(-80, 80, 300) / 4.0, rng.uniform(-25, 25, 300),
+                np.full(30, -60.0)]
+    return spark.createDataFrame(
+        [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "url string, lon double, lat double").coalesce(1)
+
+
+@pytest.mark.parametrize("how", ["inner", "left", "left_first"])
+def test_shuffle_matches_broadcast_on_concave_diamonds(spark, how):
+    """The Arrow shuffle kernel against the broadcast kernel on the concave
+    diamond grid, laid twice so matched points have two polygons. 7-row
+    Arrow batches split a point's candidate rows over batches and leave
+    batches of left-join misses only."""
+    grid = PG.diamond_grid(spark, 12, 12, -30.0, 30.0, -30.0, 30.0, concave=True)
+    polys = grid.unionByName(grid.withColumn("cell_id", F.col("cell_id") + 1000))
+    pts = _diamond_points(spark)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = {s: sorted((r["url"], -1 if r["cell_id"] is None else r["cell_id"])
+                         for r in SJ.point_in_polygon_join(
+                             pts, polys, how=how, strategy=s, cell_zoom=4).collect())
+               for s in ("broadcast", "shuffle")}
+    finally:
+        spark.conf.set(key, old)
+    assert got["shuffle"] == got["broadcast"]
+    urls = [u for u, _ in got["shuffle"]]
+    if how == "left_first":
+        assert len(urls) == len(set(urls)) == 630
+    assert sum(c >= 0 for _, c in got["shuffle"]) > 100
+    assert (how == "inner") == (("p629", -1) not in got["shuffle"])
+
+
+def _plan_nodes(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_shuffle_plan_is_one_arrow_pass(spark):
+    """Polygons with envelope columns: the cell table is JVM-only and the
+    only Python stage is the pair kernel; without them, with_envelope adds
+    one Arrow pass. No pandas stage either way."""
+    polys = PG.diamond_grid(spark, 4, 4, -10.0, 10.0, -10.0, 10.0, concave=True)
+    pts = spark.createDataFrame([("a", 0.0, 1.0)], "url string, lon double, lat double")
+    for cols, n_arrow in ((polys.columns, 1), (["cell_id", "wkb"], 2)):
+        plan = _plan_nodes(SJ.point_in_polygon_join(
+            pts, polys.select(*cols), how="left_first", strategy="shuffle"))
+        assert "MapInPandas" not in plan
+        assert plan.count("MapInArrow") == n_arrow, plan
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_empty_polygon_layer(spark, strategy):
+    """No polygons: left modes keep every point with a null polygon, inner
+    returns nothing (the broadcast path used to raise on the empty grid)."""
+    pts = spark.createDataFrame([("a", 0.0, 1.0)], "url string, lon double, lat double")
+    empty = PG.admin_grid(spark, 4, 4).limit(0)
+    got = {how: [(r["url"], r["cell_id"]) for r in SJ.point_in_polygon_join(
+        pts, empty, how=how, strategy=strategy).collect()]
+        for how in ("inner", "left", "left_first")}
+    assert got == {"inner": [], "left": [("a", None)], "left_first": [("a", None)]}
