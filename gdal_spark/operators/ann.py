@@ -41,6 +41,10 @@ def cosine_topk_bruteforce(queries: DataFrame, data: DataFrame, k: int,
     qv = F.transform(F.col(vec), lambda x: x.cast("double"))
     q = queries.select(F.col(q_id), qv.alias("_qv"))
     d = data.select(F.col(d_id), qv.alias("_dv"))
+    # Intentional broadcast cross join: exact top-k scores every (query,
+    # vector) pair. The broadcast side is the query set, bounded by
+    # |queries|; the data side streams, so the plan's
+    # BroadcastNestedLoopJoin is by design, not a missed equi-join.
     paired = F.broadcast(q).crossJoin(d)
     sim = F.round(_dot(F.col("_qv"), F.col("_dv"))
                   / (_norm(F.col("_qv")) * _norm(F.col("_dv"))), 6)

@@ -115,9 +115,6 @@ def read_bag(spark: SparkSession, path: str, raster_id: str = "bag",
     meta = RasterMeta(raster_id, W, H,
                       gt=info["gt"] or (0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
                       dtype="float32", nodata=BAG_NODATA, block=block)
-    tiles = None
-    for bi, name in enumerate(info["bands"]):
-        arr = h5.read(f"/BAG_root/{name}")[::-1].astype("float32")
-        t = from_array(spark, np.ascontiguousarray(arr), meta, band=bi)
-        tiles = t if tiles is None else tiles.unionByName(t)
-    return tiles, meta, info
+    cube = np.stack([h5.read(f"/BAG_root/{name}")[::-1]
+                     for name in info["bands"]]).astype("float32")
+    return from_array(spark, cube, meta), meta, info

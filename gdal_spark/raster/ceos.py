@@ -17,23 +17,20 @@ Reference semantics (ceosopen.c):
   (CEOSOpen :292-300, CEOSReadScanline :319-327). 8-bit only
   (ceosdataset.cpp:168).
 
-Spark shape: scanline records are fixed-stride, so block-row strips map
-to contiguous byte ranges — each executor task seeks to its strip and
-emits standard block rows for every band (one file read per strip, all
-bands sliced from it). No driver-side pixel data.
+Spark shape: scanline records are fixed-stride, so each band is a
+RawBand (offset ``data_start[b]``, line stride ``nBands *
+nImageRecLength``) read by ``raw_blocks`` on the executors. No
+driver-side pixel data.
 """
 
 from __future__ import annotations
 
 import os
 import struct
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from gdal_spark.raster.model import BLOCK, TILE_SCHEMA, RasterMeta
+from gdal_spark.raster.model import BLOCK, RasterMeta, RawBand, raw_blocks
 
 CRT_IMAGE_FDR = 0x3FC01212
 
@@ -106,42 +103,6 @@ def read_ceos(spark: SparkSession, path: str, raster_id: str = "ceos",
     height = img.n_lines if full_height else img.n_lines_avail
     meta = RasterMeta(raster_id, img.n_pixels, height,
                       dtype="uint8", block=block)
-    nby = meta.n_block_y
-    spec = spark.createDataFrame(
-        [(by,) for by in range(nby)], "by int").repartition(min(nby, 32))
-    W, nb = img.n_pixels, img.n_bands
-    starts, stride = img.data_start, img.line_offset
-    fpath = img.path
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fsize = os.path.getsize(fpath)
-        for pdf in batches:
-            rows = []
-            for by in pdf["by"]:
-                by = int(by)
-                y0 = by * block
-                h = min(block, height - y0)
-                # one contiguous range covers all bands of these lines
-                lo = min(starts) + y0 * stride
-                hi = min(fsize, max(starts) + (y0 + h - 1) * stride + W)
-                with open(fpath, "rb") as f:
-                    f.seek(lo)
-                    raw = np.frombuffer(f.read(hi - lo), np.uint8)
-                for b in range(nb):
-                    plane = np.zeros((h, W), np.uint8)
-                    for r in range(h):
-                        off = starts[b] + (y0 + r) * stride - lo
-                        if 0 <= off and off + W <= len(raw):
-                            plane[r] = raw[off:off + W]
-                        elif off < len(raw):
-                            part = raw[off:]
-                            plane[r, :len(part)] = part
-                    for bx in range((W + block - 1) // block):
-                        w = min(block, W - bx * block)
-                        rows.append((raster_id, b, bx, by, w, h,
-                                     np.ascontiguousarray(
-                                         plane[:, bx * block:bx * block + w]
-                                     ).tobytes()))
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA])
-
-    return spec.mapInPandas(run, schema=TILE_SCHEMA), meta, img
+    return raw_blocks(spark, meta, [
+        RawBand(img.path, start, 1, img.line_offset, "u1")
+        for start in img.data_start]), meta, img

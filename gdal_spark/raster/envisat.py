@@ -17,22 +17,17 @@ Reference semantics:
   pixel_size; data is big-endian (bNative=FALSE on LSB :991).
 - Every M dataset with the same NUM_DSR becomes a band (:1025-1055).
 
-Spark shape: records are fixed-stride lines, so block-row strips map to
-contiguous byte ranges; each executor task reads its strip for every
-band dataset and emits block rows (same pattern as the CEOS reader).
+Spark shape: records are fixed-stride lines, so each band dataset is a
+RawBand (offset ``DS_OFFSET + prefix``, line stride ``DSR_SIZE``) read
+by ``raw_blocks`` on the executors.
 """
 
 from __future__ import annotations
 
-import os
-import struct
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from gdal_spark.raster.model import BLOCK, TILE_SCHEMA, RasterMeta
+from gdal_spark.raster.model import BLOCK, RasterMeta, RawBand, raw_blocks
 
 MPH_SIZE = 1247
 
@@ -137,55 +132,18 @@ class EnvisatFile:
 def read_envisat(spark: SparkSession, path: str, raster_id: str = "envisat",
                  block: int = BLOCK
                  ) -> tuple[DataFrame, RasterMeta, EnvisatFile]:
-    """All same-shape measurement datasets as bands. cint16 data is
-    widened to complex64 tiles (the model has no 16-bit complex)."""
+    """All same-shape measurement datasets as bands. cint16 samples are
+    read as (re, im) int16 pairs and widened to complex64 tiles (the
+    model has no 16-bit complex)."""
     env = EnvisatFile(path)
     width, height, dt, prefix, bands = env.layout()
-    out_dt = "complex64" if dt in ("cint16", "complex64") else dt
-    meta = RasterMeta(raster_id, width, height, dtype=out_dt, block=block)
-    nby = meta.n_block_y
-    spec = spark.createDataFrame(
-        [(by,) for by in range(nby)], "by int").repartition(min(nby, 32))
-    binfo = [(d["offset"], d["dsr_size"]) for d in bands]
-    fpath = path
-
-    # big-endian on-disk element type (envisatdataset.cpp bNative=FALSE)
-    be = {"uint8": ">u1", "uint16": ">u2", "int16": ">i2",
-          "float32": ">f4", "cint16": ">i2", "complex64": ">f4"}[dt]
-    per_px = 2 if dt in ("cint16", "complex64") else 1
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for by in pdf["by"]:
-                by = int(by)
-                y0 = by * block
-                h = min(block, height - y0)
-                for b, (off, dsr) in enumerate(binfo):
-                    lo = off + y0 * dsr
-                    with open(fpath, "rb") as f:
-                        f.seek(lo)
-                        raw = f.read(h * dsr)
-                    plane = np.zeros((h, width * per_px),
-                                     np.dtype(be).newbyteorder("="))
-                    for r in range(h):
-                        seg = raw[r * dsr + prefix:
-                                  r * dsr + prefix
-                                  + width * per_px * np.dtype(be).itemsize]
-                        v = np.frombuffer(seg, be)
-                        plane[r, :len(v)] = v
-                    if dt in ("cint16", "complex64"):
-                        c = (plane[:, 0::2].astype("f4")
-                             + 1j * plane[:, 1::2].astype("f4")).astype("c8")
-                        tile_src = c
-                    else:
-                        tile_src = plane
-                    for bx in range((width + block - 1) // block):
-                        w = min(block, width - bx * block)
-                        rows.append((raster_id, b, bx, by, w, h,
-                                     np.ascontiguousarray(
-                                         tile_src[:, bx * block:
-                                                  bx * block + w]).tobytes()))
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA])
-
-    return spec.mapInPandas(run, schema=TILE_SCHEMA), meta, env
+    # big-endian on-disk sample type (envisatdataset.cpp bNative=FALSE)
+    disk = {"uint8": "u1", "uint16": ">u2", "int16": ">i2",
+            "float32": ">f4", "cint16": "(2,)>i2", "complex64": ">c8"}[dt]
+    meta = RasterMeta(raster_id, width, height,
+                      dtype="complex64" if dt == "cint16" else dt,
+                      block=block)
+    item = np.dtype(disk).itemsize
+    return raw_blocks(spark, meta, [
+        RawBand(path, d["offset"] + prefix, item, d["dsr_size"], disk)
+        for d in bands]), meta, env

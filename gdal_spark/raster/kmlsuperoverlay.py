@@ -255,9 +255,4 @@ def read_kmlsuperoverlay(spark, path: str, raster_id: str = "kmlso",
           vals.get("north", 0.0), 0.0,
           (vals.get("south", -H) - vals.get("north", 0.0)) / H)
     meta = RasterMeta(raster_id, W, H, gt=gt, dtype="uint8", block=block)
-    out = None
-    for b in range(nb):
-        t = from_array(spark, np.ascontiguousarray(full[:, :, b]), meta,
-                       band=b)
-        out = t if out is None else out.unionByName(t)
-    return out, meta
+    return from_array(spark, full.transpose(2, 0, 1), meta), meta

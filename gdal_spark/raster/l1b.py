@@ -24,7 +24,6 @@ Reference semantics: gdal/frmts/l1b/l1bdataset.cpp —
 
 from __future__ import annotations
 
-import os
 import struct
 import zipfile
 
@@ -328,12 +327,8 @@ def read_l1b(spark: SparkSession, path: str, raster_id: str = "l1b",
     l1b = L1B(path)
     meta = RasterMeta(raster_id, l1b.width, l1b.height, dtype="uint16",
                       block=block)
-    tiles = None
-    for b in range(l1b.n_bands):
-        t = from_array(spark, l1b.read_band(b), meta, band=b)
-        tiles = t if tiles is None else tiles.unionByName(t)
+    planes = [l1b.read_band(b) for b in range(l1b.n_bands)]
     if with_mask:
-        t = from_array(spark, l1b.read_mask().astype("uint16"), meta,
-                       band=l1b.n_bands)
-        tiles = tiles.unionByName(t)
-    return tiles, meta, l1b
+        planes.append(l1b.read_mask())
+    return from_array(spark, np.stack(planes).astype("uint16"), meta), \
+        meta, l1b

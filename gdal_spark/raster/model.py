@@ -14,9 +14,17 @@ small driver-side ``RasterMeta`` (the analog of the GDALDataset header),
 passed into every operator. Spark's shuffle/cache machinery replaces the
 global LRU block cache (gdal/gcore/gdalrasterblock.cpp:38).
 
-Scale notes: a 10^12-pixel raster at 256² blocks is ~15M rows — generation
-and processing stay fully distributed (spark.range over block keys, one
-Arrow batch = many blocks); nothing driver-side grows with pixel count.
+Two ways in:
+- ``raw_blocks`` reads any raster whose payload is a plain strided array
+  (GDAL's RawRasterBand): the driver parses the header into ``RawBand``
+  layouts and each executor task reads the bytes of one block row. The
+  driver never holds pixels, so nothing driver-side grows with pixel
+  count; ``synthetic_raster`` is generated the same way, from
+  ``spark.range`` over block keys.
+- ``from_array`` turns an array already decoded on the driver into block
+  rows. Readers whose payload needs a sequential decode (ASCII grids,
+  compressed codecs, sub-byte packing) use it, so their driver memory
+  grows with the raster.
 """
 
 from __future__ import annotations
@@ -131,17 +139,99 @@ def synthetic_raster(spark: SparkSession, meta: RasterMeta,
 
 def from_array(spark: SparkSession, arr: np.ndarray, meta: RasterMeta,
                band: int = 0) -> DataFrame:
-    """Small-array → block rows (test fixture helper, driver-side)."""
-    assert arr.shape == (meta.height, meta.width)
+    """Driver-side array → block rows in one ``createDataFrame``.
+    ``arr`` is one (h, w) band, or a (bands, h, w) cube whose planes
+    become bands ``band``, ``band + 1``, ..."""
+    cube = arr[None] if arr.ndim == 2 else arr
+    assert cube.shape[1:] == (meta.height, meta.width)
     rows = []
     b = meta.block
-    for by in range(meta.n_block_y):
-        for bx in range(meta.n_block_x):
-            sub = np.ascontiguousarray(
-                arr[by * b:(by + 1) * b, bx * b:(bx + 1) * b]).astype(meta.dtype)
-            rows.append((meta.raster_id, band, bx, by,
-                         sub.shape[1], sub.shape[0], bytearray(sub.tobytes())))
+    for i, plane in enumerate(cube):
+        for by in range(meta.n_block_y):
+            for bx in range(meta.n_block_x):
+                sub = np.ascontiguousarray(
+                    plane[by * b:(by + 1) * b, bx * b:(bx + 1) * b]
+                ).astype(meta.dtype)
+                rows.append((meta.raster_id, band + i, bx, by, sub.shape[1],
+                             sub.shape[0], bytearray(sub.tobytes())))
     return spark.createDataFrame(rows, TILE_SCHEMA)
+
+
+@dataclass(frozen=True)
+class RawBand:
+    """Byte layout of one band, GDAL's RawRasterBand
+    (gdal/gcore/rawdataset.cpp): sample (x, y) is stored at
+    ``offset + y * line_stride + x * pixel_stride`` in ``path`` as
+    ``dtype``, a numpy type string with its byte order (``">i2"``).
+    A negative ``line_stride`` stores the rows bottom-up. A two-element
+    subarray type such as ``"(2,)>i2"`` is the (re, im) pair of a complex
+    integer sample. A band with ``path=None`` has no file and reads as
+    zeros."""
+    path: str | None
+    offset: int
+    pixel_stride: int
+    line_stride: int
+    dtype: str
+
+
+def raw_blocks(spark: SparkSession, meta: RasterMeta,
+               bands: list[RawBand]) -> DataFrame:
+    """Block rows of a raw raster, read on the executors.
+
+    One task key per (band, block row) comes from ``spark.range``, in at
+    most ``defaultParallelism`` partitions. Each key reads the byte span
+    its block row touches, views it as ``np.ndarray(strides=(line_stride,
+    pixel_stride))``, casts to ``meta.dtype`` and cuts it into blocks.
+    Bytes past end of file read as zero, as RawRasterBand does. Band i of
+    the output is ``bands[i]``."""
+    import pyarrow as pa
+
+    nby, nbx = meta.n_block_y, meta.n_block_x
+    n = len(bands) * nby
+    keys = spark.range(0, n, 1, max(1, min(
+        n, spark.sparkContext.defaultParallelism)))
+    rid, width, height, block = (meta.raster_id, meta.width, meta.height,
+                                 meta.block)
+    out = np.dtype(meta.dtype)
+    names = TILE_SCHEMA.fieldNames()
+
+    def strip(band: RawBand, y0: int, h: int) -> np.ndarray:
+        dt = np.dtype(band.dtype)
+        first = band.offset + y0 * band.line_stride     # sample (0, y0)
+        rows = sorted((0, (h - 1) * band.line_stride))
+        cols = sorted((0, (width - 1) * band.pixel_stride))
+        lo = first + rows[0] + cols[0]
+        size = rows[1] - rows[0] + cols[1] - cols[0] + dt.itemsize
+        buf = b""
+        if band.path is not None:
+            with open(band.path, "rb") as f:
+                f.seek(lo)
+                buf = f.read(size)
+        a = np.ndarray((h, width), dt, buf.ljust(size, b"\0"), first - lo,
+                       (band.line_stride, band.pixel_stride))
+        if a.ndim == 3:     # (re, im) pairs -> complex
+            return np.ascontiguousarray(a, np.finfo(out).dtype).view(
+                out)[..., 0]
+        return a.astype(out)
+
+    def run(batches):
+        for batch in batches:
+            for key in batch.column(0).to_pylist():
+                b, by = divmod(key, nby)
+                h = min(block, height - by * block)
+                a = strip(bands[b], by * block, h)
+                cuts = [a[:, x:x + block] for x in range(0, width, block)]
+                yield pa.RecordBatch.from_arrays([
+                    pa.array([rid] * nbx, pa.string()),
+                    pa.array([b] * nbx, pa.int32()),
+                    pa.array(range(nbx), pa.int32()),
+                    pa.array([by] * nbx, pa.int32()),
+                    pa.array([c.shape[1] for c in cuts], pa.int32()),
+                    pa.array([h] * nbx, pa.int32()),
+                    pa.array([np.ascontiguousarray(c).tobytes()
+                              for c in cuts], pa.binary())], names=names)
+
+    return keys.mapInArrow(run, TILE_SCHEMA)
 
 
 def nonzero_pixels(tiles: DataFrame, meta: RasterMeta, band: int = 0) -> DataFrame:

@@ -145,12 +145,7 @@ def read_ntv2(spark, path: str, grid: int = 0, raster_id: str = "ntv2",
     g = read_ntv2_grids(path)[grid]
     meta = RasterMeta(raster_id, g.width, g.height, gt=g.geotransform(),
                       dtype="float32", block=block)
-    tiles = None
-    for b in range(4):
-        t = from_array(spark, np.ascontiguousarray(g.data[:, :, b]),
-                       meta, band=b)
-        tiles = t if tiles is None else tiles.unionByName(t)
-    return tiles, meta, g
+    return from_array(spark, g.data.transpose(2, 0, 1), meta), meta, g
 
 
 def apply_shift(g: NTv2Grid, lon: np.ndarray, lat: np.ndarray

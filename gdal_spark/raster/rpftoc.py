@@ -30,10 +30,9 @@ import struct
 from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from gdal_spark.raster.model import RasterMeta, from_array
-from gdal_spark.raster.nitf import open_nitf
 
 LID_HEADER = 128
 LID_COVERAGE = 130
@@ -483,8 +482,4 @@ def read_toc_entry(spark: SparkSession, name: str,
     meta = RasterMeta(raster_id, W, H, gt=tuple(gt), dtype="uint8",
                       nodata=float(nodata) if nodata is not None and
                       not rgba else None, block=block)
-    tiles = None
-    for b in range(nb):
-        t = from_array(spark, planes[b], meta, band=b)
-        tiles = t if tiles is None else tiles.unionByName(t)
-    return tiles, meta, info
+    return from_array(spark, np.stack(planes), meta), meta, info

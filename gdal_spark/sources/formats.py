@@ -3112,63 +3112,63 @@ def read_gtm_distributed(spark: SparkSession, path: str,
                          batch: int = 4096) -> DataFrame:
     """Executor-side GTM waypoint decode, same output as
     ``read_gtm(layer='waypoints')``. Waypoint records are
-    length-chained (counted comment strings), so record boundaries are
-    found by a driver-side LENGTH-ONLY scan (one u16 per record, no
-    string/geometry decode); the offsets fan out in batches and each
-    task seeks + decodes its slice. Tracks keep the driver parse: the
-    trackpoint start-flag chain is sequential by definition."""
+    length-chained (counted comment strings), so the driver walks the
+    chain with seeks and 2-byte reads (one u16 per record, no
+    string/geometry decode); the (offset, length) pairs fan out in
+    batches and each task reads only its own records. Tracks keep the
+    driver parse: the trackpoint start-flag chain is sequential by
+    definition."""
     import pandas as _pd
 
     from gdal_spark.functions import geometry as _G
 
+    spans = []
     with open(path, "rb") as fh:
-        data_head = fh.read(99)
-    u16h = lambda b, o: struct.unpack_from("<H", b, o)[0]
-    i32h = lambda b, o: struct.unpack_from("<i", b, o)[0]
-    nwpts = i32h(data_head, 35)
-    n_maps = i32h(data_head, 63)
-    # header/datum/map-image skip needs the variable-length strings —
-    # read just enough of the file head for the chain scan
-    with open(path, "rb") as fh:
-        head = fh.read()
-    pos = 99
-    for _ in range(4):
-        pos += 2 + u16h(head, pos)
-    pos += 58
-    for _ in range(n_maps):
-        pos += 2 + u16h(head, pos)
-        pos += 2 + u16h(head, pos)
-        pos += 30
-    offsets = []
-    for _ in range(nwpts):
-        offsets.append(pos)
-        clen = u16h(head, pos + 26)
-        pos += 26 + 2 + clen + 15
-    spec = spark.createDataFrame(
-        [(i, o) for i, o in enumerate(offsets)], "fid long, off long")
+        head = fh.read(99)
+        nwpts = struct.unpack_from("<i", head, 35)[0]
+        n_maps = struct.unpack_from("<i", head, 63)[0]
+
+        def u16(at: int) -> int:
+            fh.seek(at)
+            return struct.unpack("<H", fh.read(2))[0]
+
+        # header strings, datum block, map images, then the waypoints
+        pos = 99
+        for _ in range(4):
+            pos += 2 + u16(pos)
+        pos += 58
+        for _ in range(n_maps):
+            pos += 2 + u16(pos)
+            pos += 2 + u16(pos)
+            pos += 30
+        for _ in range(nwpts):
+            size = 26 + 2 + u16(pos + 26) + 15
+            spans.append((len(spans), pos, size))
+            pos += size
+    spec = spark.createDataFrame(spans, "fid long, off long, size long")
 
     def run(batches):
         import datetime as _dt
         with open(path, "rb") as fh:
-            blob = fh.read()
-        for pdf in batches:
-            rows = []
-            for fid, o in zip(pdf["fid"], pdf["off"]):
-                o = int(o)
-                lat, lon = struct.unpack_from("<2d", blob, o)
-                name = blob[o + 16:o + 26].decode("latin-1").rstrip()
-                clen = struct.unpack_from("<H", blob, o + 26)[0]
-                comment = blob[o + 28:o + 28 + clen].decode("latin-1")
-                icon = struct.unpack_from("<H", blob, o + 28 + clen)[0]
-                date = struct.unpack_from("<i", blob, o + 28 + clen + 3)[0]
-                t = None
-                if date:
-                    t = _dt.datetime.utcfromtimestamp(
-                        date + 631065600).strftime("%Y/%m/%d %H:%M:%S")
-                rows.append((int(fid), name, comment, icon, t,
-                             bytearray(_G.encode_point(lon, lat))))
-            yield _pd.DataFrame(rows, columns=[
-                "fid", "name", "comment", "icon", "time", "geometry"])
+            for pdf in batches:
+                rows = []
+                for fid, o, size in zip(pdf["fid"], pdf["off"], pdf["size"]):
+                    fh.seek(int(o))
+                    rec = fh.read(int(size))
+                    lat, lon = struct.unpack_from("<2d", rec, 0)
+                    name = rec[16:26].decode("latin-1").rstrip()
+                    clen = struct.unpack_from("<H", rec, 26)[0]
+                    comment = rec[28:28 + clen].decode("latin-1")
+                    icon = struct.unpack_from("<H", rec, 28 + clen)[0]
+                    date = struct.unpack_from("<i", rec, 28 + clen + 3)[0]
+                    t = None
+                    if date:
+                        t = _dt.datetime.utcfromtimestamp(
+                            date + 631065600).strftime("%Y/%m/%d %H:%M:%S")
+                    rows.append((int(fid), name, comment, icon, t,
+                                 bytearray(_G.encode_point(lon, lat))))
+                yield _pd.DataFrame(rows, columns=[
+                    "fid", "name", "comment", "icon", "time", "geometry"])
 
     return spec.repartition(max(1, nwpts // batch)).mapInPandas(
         run, "fid long, name string, comment string, icon long, "

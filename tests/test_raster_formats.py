@@ -25,6 +25,18 @@ def _meta(rid, w, h, dtype="uint8", block=8, nodata=None):
                         dtype=dtype, block=block, nodata=nodata)
 
 
+def _synthetic(spark, dtype="uint8", bands=1):
+    """A 20x20 writer source in 16-pixel blocks (partial edge blocks),
+    and its per-band py_checksum."""
+    from gdal_spark.raster.checksum import py_checksum
+    meta = M.RasterMeta("syn", 20, 20,
+                        gt=(440720.0, 60.0, 0.0, 3751320.0, 0.0, -60.0),
+                        dtype=dtype, block=16)
+    tiles = M.synthetic_raster(
+        spark, meta, lambda X, Y: (X * 7 + Y * 13 + 5) % 251, bands=bands)
+    return tiles, meta, py_checksum(M.to_array(tiles, meta))
+
+
 @pytest.mark.parametrize("dtype", ["uint8", "uint16", "int16", "int32",
                                    "float32", "float64"])
 def test_geotiff_bytes_roundtrip(dtype):
@@ -488,38 +500,32 @@ def test_ehdr_read_float32_golden(spark):
 
 
 def test_ehdr_roundtrip_byte(spark, tmp_path):
-    """ehdr_2 shape: byte.tif -> EHdr -> read keeps checksum 4672 and
+    """ehdr_2 shape: a byte raster -> EHdr -> read keeps its checksum and
     the geotransform."""
     from gdal_spark.raster import formats as FM
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
-    bands, meta = FM.parse_geotiff(open(
-        _gcore("byte.tif"), "rb").read())
-    tiles = M.from_array(spark, bands[0], meta)
+    tiles, meta, want = _synthetic(spark)
     out = str(tmp_path / "byte.bil")
     FM.write_ehdr(tiles, meta, out)
     t2, m2 = FM.read_ehdr(spark, out)
-    assert py_checksum(M.to_array(t2, m2)) == 4672
+    assert py_checksum(M.to_array(t2, m2)) == want
     assert m2.gt == pytest.approx(meta.gt)
 
 
-@pytest.mark.parametrize("src,dtype", [
-    ("int16.tif", "int16"), ("int32.tif", "int32"),
-    ("float32.tif", "float32")])
-def test_bt_roundtrip_goldens(spark, tmp_path, src, dtype):
+@pytest.mark.parametrize("dtype", ["int16", "int32", "float32"])
+def test_bt_roundtrip_goldens(spark, tmp_path, dtype):
     """bt_1/2/3: int16/int32/float32 rasters round-trip through the BT
-    format with checksum 4672 and the source geotransform."""
+    format with their checksum and geotransform."""
     from gdal_spark.raster import formats as FM
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
-    bands, meta = FM.parse_geotiff(open(
-        _gcore(src), "rb").read())
-    tiles = M.from_array(spark, bands[0], meta)
-    out = str(tmp_path / (src + ".bt"))
+    tiles, meta, want = _synthetic(spark, dtype)
+    out = str(tmp_path / (dtype + ".bt"))
     FM.write_bt(tiles, meta, out)
     t2, m2 = FM.read_bt(spark, out)
     assert m2.dtype == dtype
-    assert py_checksum(M.to_array(t2, m2)) == 4672
+    assert py_checksum(M.to_array(t2, m2)) == want
     assert m2.gt == pytest.approx(meta.gt)
 
 
@@ -538,16 +544,15 @@ def test_envi_read_golden(spark):
 
 
 def test_envi_roundtrip(spark, tmp_path):
-    """envi_2: lossless export/import of aea.dat (checksum + gt kept)."""
+    """envi_2: lossless export/import (checksum + gt kept)."""
     from gdal_spark.raster import formats as FM
     from gdal_spark.raster import model as M
     from gdal_spark.raster.checksum import py_checksum
-    t, m = FM.read_envi(
-        spark, _gd("aea.dat"))
-    out = str(tmp_path / "aea.dat")
+    t, m, want = _synthetic(spark)
+    out = str(tmp_path / "syn.dat")
     FM.write_envi(t, m, out)
     t2, m2 = FM.read_envi(spark, out)
-    assert py_checksum(M.to_array(t2, m2)) == 14823
+    assert py_checksum(M.to_array(t2, m2)) == want
     assert m2.gt == pytest.approx(m.gt)
 
 
@@ -719,23 +724,21 @@ def test_batch2_classic_formats(spark):
 
 
 def test_zmap_roundtrip(spark, tmp_path):               # zmap_1
-    tiles, meta = RF.read_geotiff(spark, _gd("byte.tif")), \
-        RF.geotiff_meta(_gd("byte.tif"))
+    tiles, meta, want = _synthetic(spark)
     out = str(tmp_path / "z.zmap")
     RF.write_zmap(tiles, meta, out)
     t2, m2 = RF.read_zmap(spark, out)
-    assert checksum(t2, m2).collect()[0]["checksum"] == 4672
+    assert checksum(t2, m2).collect()[0]["checksum"] == want
     assert all(abs(a - b) < 1e-8 for a, b in zip(m2.gt, meta.gt))
 
 
 def test_kro_roundtrip(spark, tmp_path):                # kro_1/2
-    tiles = RF.read_geotiff(spark, _gd("rgbsmall.tif"))
-    meta = RF.geotiff_meta(_gd("rgbsmall.tif"))
+    tiles, meta, want = _synthetic(spark, bands=3)
     out = str(tmp_path / "k.kro")
     RF.write_kro(tiles, meta, out, nbands=3)
     t2, m2 = RF.read_kro(spark, out)
     cs = {r["band"]: r["checksum"] for r in checksum(t2, m2).collect()}
-    assert cs[1] == 21053       # green band golden
+    assert cs == {0: want, 1: want, 2: want}
 
 
 def test_gxf_and_pnm_goldens(spark):
@@ -802,17 +805,16 @@ def test_northwood_goldens(spark):                      # nwt_grd_1 / grc_1
 
 
 def test_hf2_roundtrip(spark, tmp_path):                # hf2_1 / hf2_2
-    tiles = RF.read_geotiff(spark, _gd("byte.tif"))
-    meta = RF.geotiff_meta(_gd("byte.tif"))
+    tiles, meta, want = _synthetic(spark)
     out = str(tmp_path / "t.hf2")
     RF.write_hf2(tiles, meta, out)
     t2, m2 = RF.read_hf2(spark, out)
-    assert checksum(t2, m2).collect()[0]["checksum"] == 4672
+    assert checksum(t2, m2).collect()[0]["checksum"] == want
     assert all(abs(a - b) < 1e-8 for a, b in zip(m2.gt, meta.gt))
     out2 = str(tmp_path / "t.hfz")
     RF.write_hf2(tiles, meta, out2, tile_size=10, compress=True)
     t3, m3 = RF.read_hf2(spark, out2)
-    assert checksum(t3, m3).collect()[0]["checksum"] == 4672
+    assert checksum(t3, m3).collect()[0]["checksum"] == want
 
 
 @pytest.mark.parametrize("fn,cs,gt,nodata", [

@@ -133,10 +133,13 @@ def test_metadata_probe_runs_no_job(spark, tmp_path):
 
 
 def _job_count(spark) -> int:
-    """Jobs in the core status store, after the listener bus drains."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    return sc.statusStore().jobsList(None).size()
+    """Jobs started so far (highest job id + 1), after the listener bus
+    drains. Not the size of the status store: past spark.ui.retainedJobs
+    (1000) it evicts the oldest tenth, so its size can fall while a job
+    runs."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1) + 1
 
 
 @pytest.mark.parametrize("grid", ["admin", "diamond"])
